@@ -78,53 +78,61 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_CACHE: dict = {}
 
 
+def _session_memo(spark, sf_dir, name, build):
+    """``build()`` once per (session, sf_dir, name); later calls return
+    the same object until ``_SESSION_CACHE`` is cleared."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _SESSION_CACHE:
+        _SESSION_CACHE[key] = build()
+    return _SESSION_CACHE[key]
+
+
+def _persisted(df, eager):
+    """persist(MEMORY_AND_DISK); ``eager`` materializes it at once.
+
+    Eager is for relations a consumer embeds several times in ONE plan:
+    lazy persist lets AQE run concurrent query stages that each
+    recompute the not-yet-cached relation (measured: cold-first
+    cooccur_triangles 38.8 s lazy vs ~12 s eager at sf0.1)."""
+    from pyspark.storagelevel import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if eager:
+        df.count()
+    return df
+
+
 def _entities_cached(spark, sf_dir):
     """Full-precision flagship extraction (gazetteer backend, global
-    threshold), persisted once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "entities")
-    df = _SESSION_CACHE.get(key)
-    if df is None:
-        from pyspark.storagelevel import StorageLevel
+    threshold), persisted eagerly once per (session, sf_dir)."""
+    from glinerswift_spark.operators.extract import extract_entities
 
-        from glinerswift_spark.operators.extract import extract_entities
-
-        df = extract_entities(
+    return _session_memo(spark, sf_dir, "entities", lambda: _persisted(
+        extract_entities(
             _docs(spark, sf_dir), FLAGSHIP_LABELS, flagship_gazetteer(),
             threshold=THRESHOLD,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # eager: materialize ONCE before any consumer embeds this relation
-        # several times in one plan — lazy persist lets AQE run concurrent
-        # query stages that each recompute the not-yet-cached extraction
-        # (measured: cold-first cooccur_triangles 38.8 s lazy vs ~12 s
-        # eager at sf0.1)
-        df.count()
-        _SESSION_CACHE[key] = df
-    return df
+        ),
+        eager=True,
+    ))
 
 
 def _kg_cached(spark, sf_dir):
     """Memoized build_kg over the cached extraction; mention_map (the
     connected-components output every downstream consumer re-joins) is
-    additionally persisted — nodes, edges, centroids, timespans and
-    negatives all embed it in their plans."""
-    key = (spark.sparkContext.applicationId, sf_dir, "kg")
-    kg = _SESSION_CACHE.get(key)
-    if kg is None:
-        from pyspark.storagelevel import StorageLevel
+    additionally persisted, eagerly — nodes, edges, centroids, timespans
+    and negatives all embed it in their plans."""
+    from glinerswift_spark.plans.kg_pipeline import build_kg
 
-        from glinerswift_spark.plans.kg_pipeline import build_kg
-
+    def build():
         kg = build_kg(
             _docs(spark, sf_dir), _emb(spark, sf_dir),
             FLAGSHIP_LABELS, flagship_gazetteer(), threshold=THRESHOLD,
             entities=_entities_cached(spark, sf_dir),
         )
-        kg["mention_map"] = kg["mention_map"].persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        kg["mention_map"].count()  # eager — see _entities_cached
-        _SESSION_CACHE[key] = kg
-    return kg
+        kg["mention_map"] = _persisted(kg["mention_map"], eager=True)
+        return kg
+
+    return _session_memo(spark, sf_dir, "kg", build)
 
 
 def _shingles_cached(spark, sf_dir):
@@ -138,18 +146,11 @@ def _shingles_cached(spark, sf_dir):
     min of 4). Lineage stays intact, so a harness that force-unpersists
     between timed queries (bench._drop_leaked_state) keeps every query
     contractually standalone; results are byte-identical either way."""
-    key = (spark.sparkContext.applicationId, sf_dir, "shingles3")
-    df = _SESSION_CACHE.get(key)
-    if df is None:
-        from pyspark.storagelevel import StorageLevel
+    from glinerswift_spark.operators.dedup import doc_shingles
 
-        from glinerswift_spark.operators.dedup import doc_shingles
-
-        df = doc_shingles(_docs(spark, sf_dir), 3).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _SESSION_CACHE[key] = df
-    return df
+    return _session_memo(spark, sf_dir, "shingles3", lambda: _persisted(
+        doc_shingles(_docs(spark, sf_dir), 3), eager=False
+    ))
 
 
 def _q_kg_entities(spark, sf_dir):
@@ -1291,35 +1292,30 @@ def _cooccur_knn(spark, sf_dir):
     LPA rounds, k-core peels) each embed this relation SEVERAL times in
     one plan, and without a cache every instance re-runs the pair
     self-join + window."""
-    key = (spark.sparkContext.applicationId, sf_dir, "cooccur_knn")
-    memo = _SESSION_CACHE.get(key)
-    if memo is not None:
-        return memo
     from pyspark.sql import Window
 
-    de = _q_kg_entities(spark, sf_dir).select("doc_id", "entity").distinct()
-    a = de.select("doc_id", F.col("entity").alias("ent_a"))
-    b = de.select("doc_id", F.col("entity").alias("ent_b"))
-    p = (
-        a.join(b, "doc_id")
-        .where(F.col("ent_a") < F.col("ent_b"))
-        .groupBy("ent_a", "ent_b")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
-    arcs = p.select(
-        F.col("ent_a").alias("s"), F.col("ent_b").alias("t"), "n_pair"
-    ).union(p.select(F.col("ent_b"), F.col("ent_a"), "n_pair"))
-    w = Window.partitionBy("s").orderBy(F.desc("n_pair"), "t")
-    from pyspark.storagelevel import StorageLevel
+    def build():
+        de = _q_kg_entities(spark, sf_dir).select("doc_id", "entity").distinct()
+        a = de.select("doc_id", F.col("entity").alias("ent_a"))
+        b = de.select("doc_id", F.col("entity").alias("ent_b"))
+        p = (
+            a.join(b, "doc_id")
+            .where(F.col("ent_a") < F.col("ent_b"))
+            .groupBy("ent_a", "ent_b")
+            .agg(F.count(F.lit(1)).alias("n_pair"))
+        )
+        arcs = p.select(
+            F.col("ent_a").alias("s"), F.col("ent_b").alias("t"), "n_pair"
+        ).union(p.select(F.col("ent_b"), F.col("ent_a"), "n_pair"))
+        w = Window.partitionBy("s").orderBy(F.desc("n_pair"), "t")
+        knn = (
+            arcs.withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") <= 6)
+            .select("s", "t")
+        )
+        return _persisted(knn, eager=True)
 
-    knn = (
-        arcs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 6)
-        .select("s", "t")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    knn.count()  # eager — see _entities_cached
-    _SESSION_CACHE[key] = knn
-    return knn
+    return _session_memo(spark, sf_dir, "cooccur_knn", build)
 
 
 def _q_cooccur_triangles(spark, sf_dir):

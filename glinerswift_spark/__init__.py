@@ -16,10 +16,9 @@ config.py            Configuration defaults (ref: Models/Configuration.swift:45-
 schema.py            Schema/extraction-request builder (ref: API/Schema.swift)
 functions/           pure text/vector/hash functions (word split, chunker, minhash)
 scoring/             span enumeration + scoring backends + greedy decode
-operators/           Spark DataFrame operators (extract, nms, dedup, linking, cc, ...)
+operators/           Spark DataFrame operators (extract, dedup, linking, cc, ...)
 sources/             readers/writers (pages table, JSONL fixtures, graph sinks)
 plans/               end-to-end composed pipelines (flagship KG construction)
-streaming/           foreachBatch-compatible wrappers (batch-first design)
 """
 
 __version__ = "0.1.0"

@@ -2,7 +2,7 @@
 
 Defaults mirror the reference's active code path, not its README:
 ref Models/Configuration.swift:45-65 (threshold 0.3, maxSequenceLength 384,
-strideLength 192, maxSpanLength 8, hiddenDim 512, nmsThreshold 0.5) and the
+strideLength 192, maxSpanLength 8, hiddenDim 512) and the
 manifest constants (max_seq_len 512, max_width 8, max_schema_tokens 64,
 max_count 20 — ref Tests/GLiNERSwiftTests/GLiNER2ResourcesTests.swift:17-18).
 
@@ -26,7 +26,6 @@ class Configuration:
     stride_length: int = 192
     max_span_width: int = 8          # ref max_width=8 (GLiNER2ResourcesTests.swift:17-18)
     hidden_dim: int = 512
-    nms_threshold: float = 0.5       # legacy per-label IoU variant only
     max_schema_tokens: int = 64
     max_count: int = 20
     max_word_count: int = 240        # ref TextChunker.defaultMaxWordLimit

@@ -51,12 +51,20 @@ def minhash_band_sig_from_hashes(hashes: Column, band: int) -> Column:
     )
 
 
-def minhash_band_sig(shingles: Column, band: int) -> Column:
-    """min over shingles of an 8-hex-char band slice of md5(shingle).
-
-    Compatibility wrapper; prefer materializing ``shingle_hashes`` as a
-    column first so the planner computes md5 once across bands."""
-    return minhash_band_sig_from_hashes(shingle_hashes(shingles), band)
+def band_signatures(hashes: Column, num_bands: int) -> Column:
+    """One (band, sig) struct per band 1..num_bands, exploded into rows —
+    the LSH bucket keys shared by document dedup and mention linking."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    minhash_band_sig_from_hashes(hashes, b).alias("sig"),
+                )
+                for b in range(1, num_bands + 1)
+            ]
+        )
+    )
 
 
 def rolling_word_fingerprint(words: Column) -> Column:

@@ -118,9 +118,3 @@ def run_stage_with_checkpoint(
         counters.write.mode("append").parquet(_status_path(root))
     return spark.read.parquet(out_path)
 
-
-def partition_counters(df: DataFrame) -> DataFrame:
-    """Per-task row counters (A9): rows per physical partition for lineage."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows")
-    )

@@ -185,22 +185,6 @@ def top_prediction(classified: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def apply_validators(entities: DataFrame, fld: FieldSpec) -> DataFrame:
-    """Regex validators as column predicates (ref Schema.swift:264-300)."""
-    out = entities
-    for v in fld.validators:
-        pat = f"(?i){v.pattern}"
-        if v.mode == "full":
-            out = out.where(F.regexp_like("entity", F.lit(f"^(?:{pat})$")))
-        elif v.mode == "partial":
-            out = out.where(F.regexp_like("entity", F.lit(pat)))
-        elif v.mode == "exclude":
-            out = out.where(~F.regexp_like("entity", F.lit(pat)))
-        else:
-            raise ValueError(v.mode)
-    return out
-
-
 def project_dtype(
     entities: DataFrame, dtype: str, id_cols: list[str] | None = None
 ) -> DataFrame:

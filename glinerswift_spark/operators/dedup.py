@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from glinerswift_spark.functions.hashing import (
-    minhash_band_sig_from_hashes,
+    band_signatures,
     shingle_hashes,
     shingles_expr,
     words_col,
@@ -119,18 +119,7 @@ def minhash_candidate_pairs(
     # instead of num_bands
     hashed = sh.select(F.col(id_col), shingle_hashes(F.col("shingles")).alias("__h"))
     sigs = hashed.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        minhash_band_sig_from_hashes(F.col("__h"), b).alias("sig"),
-                    )
-                    for b in range(1, num_bands + 1)
-                ]
-            )
-        ).alias("bs"),
+        id_col, band_signatures(F.col("__h"), num_bands).alias("bs")
     ).select(id_col, "bs.band", "bs.sig")
 
     # the signature relation is referenced twice below (census + join
@@ -163,9 +152,13 @@ def minhash_candidate_pairs(
         F.col("__ids"),
         lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
     )
+    # a duplicated id sorts next to itself, so the expansion would pair
+    # it with itself; input ids are meant to be unique, but dirty input
+    # must not surface a self-pair
     return (
         grp.select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b")
+        .where(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
 
@@ -176,7 +169,7 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df: int | None = 1000,
+    max_df: int = 1000,
     hi_chunks: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -188,9 +181,7 @@ def ngram_jaccard_pairs(
     navigation footer shingle with k in the millions is a job-killer.
     The guard only prunes CANDIDATES — the jaccard itself is computed
     exactly over the FULL distinct-shingle sets, so for any pair that
-    still surfaces the value is identical to the unguarded form. Pass
-    ``max_df=None`` for exhaustive candidate generation (small corpora /
-    oracle replay parity).
+    still surfaces the value is identical to the unguarded form.
 
     ``hi_chunks``: width bound for the high-df correction (PLANS.md
     "jaccard high-df width bound"). The default single-array form gives
@@ -232,31 +223,6 @@ def ngram_jaccard_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if max_df is None:
-        # exhaustive mode (small corpora / oracle replay parity): no df
-        # guard means no bound on a shingle's postings, so keep the
-        # streaming self-join — a group-collect here would buffer an
-        # unbounded bucket
-        a = exz.select(F.col(id_col).alias("doc_a"), "sh", F.col("__z").alias("__za"))
-        b = exz.select(F.col(id_col).alias("doc_b"), "sh", F.col("__z").alias("__zb"))
-        guarded_stats = (
-            a.join(b, "sh")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("__ig"),
-                F.max("__za").alias("__za"),
-                F.max("__zb").alias("__zb"),
-            )
-        )
-        pair_stats = guarded_stats.withColumn("__i", F.col("__ig"))
-        jac = F.col("__i") / (F.col("__za") + F.col("__zb") - F.col("__i"))
-        return pair_stats.select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 6).alias("jaccard"),
-        ).where(F.col("jaccard") >= threshold)
-
     dfreq = exz.groupBy("sh").count()
     # guarded = df <= max_df AND df >= 2: a shingle appearing in ONE doc
     # can be shared by no pair, contributes nothing to any intersection
@@ -295,6 +261,7 @@ def ngram_jaccard_pairs(
     guarded_stats = (
         grouped.select(F.explode(inc).alias("p"))
         .select("p.*")
+        .where(F.col("doc_a") != F.col("doc_b"))  # duplicate ids: see minhash
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("__ig"),

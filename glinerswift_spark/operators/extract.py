@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 
 from glinerswift_spark.config import Configuration, DEFAULT_CONFIG
 from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.pipeline import extract_document, extract_documents_batch
+from glinerswift_spark.scoring.pipeline import extract_documents_batch
 
 ENTITY_FIELDS = [
     StructField("label", StringType()),
@@ -48,6 +48,24 @@ ENTITY_FIELDS = [
 def entity_output_schema(df: DataFrame, id_cols: list[str]) -> StructType:
     id_fields = [f for f in df.schema.fields if f.name in set(id_cols)]
     return StructType(id_fields + ENTITY_FIELDS)
+
+
+def _append_entity_rows(
+    rows: dict[str, list], pdf: pd.DataFrame, id_cols: list[str],
+    doc_idxs, ents_per_doc,
+) -> None:
+    """One long-format row per entity; ``doc_idxs[k]`` is the ``pdf`` row
+    whose entities are ``ents_per_doc[k]``."""
+    ids = {c: pdf[c] for c in id_cols}
+    for i, ents in zip(doc_idxs, ents_per_doc):
+        for e in ents:
+            for c in id_cols:
+                rows[c].append(ids[c].iat[i])
+            rows["label"].append(e.label)
+            rows["entity"].append(e.text)
+            rows["score"].append(e.score)
+            rows["start"].append(e.start)
+            rows["end"].append(e.end)
 
 
 def extract_entities(
@@ -74,21 +92,13 @@ def extract_entities(
         backend = get_backend(backend_spec)  # per-worker singleton
         for pdf in batches:
             rows: dict[str, list] = {c: [] for c in out_cols}
-            texts = pdf[text_col]
-            ids = {c: pdf[c] for c in id_cols}
             ents_per_doc = extract_documents_batch(
-                texts.tolist(), labels, backend, threshold=threshold,
+                pdf[text_col].tolist(), labels, backend, threshold=threshold,
                 config=config, label_groups=label_groups,
             )
-            for i, ents in enumerate(ents_per_doc):
-                for e in ents:
-                    for c in id_cols:
-                        rows[c].append(ids[c].iat[i])
-                    rows["label"].append(e.label)
-                    rows["entity"].append(e.text)
-                    rows["score"].append(e.score)
-                    rows["start"].append(e.start)
-                    rows["end"].append(e.end)
+            _append_entity_rows(
+                rows, pdf, id_cols, range(len(ents_per_doc)), ents_per_doc
+            )
             yield pd.DataFrame(rows, columns=out_cols)
 
     from glinerswift_spark.sources.pages import (
@@ -155,15 +165,7 @@ def extract_entities_per_request(
                     [pdf[text_col].iat[i] for i in idxs], list(labels),
                     backend, threshold=thr, config=config,
                 )
-                for i, ents in zip(idxs, ents_per_doc):
-                    for e in ents:
-                        for c in id_cols:
-                            rows[c].append(pdf[c].iat[i])
-                        rows["label"].append(e.label)
-                        rows["entity"].append(e.text)
-                        rows["score"].append(e.score)
-                        rows["start"].append(e.start)
-                        rows["end"].append(e.end)
+                _append_entity_rows(rows, pdf, id_cols, idxs, ents_per_doc)
             yield pd.DataFrame(rows, columns=out_cols)
 
     keep = [*id_cols, text_col, labels_col]

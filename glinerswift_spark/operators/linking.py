@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from glinerswift_spark.config import LinkingConfig
 from glinerswift_spark.functions.hashing import (
+    band_signatures,
     cosine,
-    minhash_band_sig_from_hashes,
     shingle_hashes,
 )
 from glinerswift_spark.operators.components import connected_components
@@ -44,19 +44,7 @@ def mention_candidate_pairs(
         shingle_hashes(char_shingles(F.col("text"), cfg.shingle_size)).alias("__h"),
     )
     sigs = sh.select(
-        "mention_id",
-        "label",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        minhash_band_sig_from_hashes(F.col("__h"), b).alias("sig"),
-                    )
-                    for b in range(1, cfg.num_bands + 1)
-                ]
-            )
-        ).alias("bs"),
+        "mention_id", "label", band_signatures(F.col("__h"), cfg.num_bands).alias("bs")
     ).select("mention_id", "label", "bs.band", "bs.sig")
     # both self-join halves reference sigs: persist so the per-mention
     # shingle md5 work runs once (see dedup.minhash_candidate_pairs)

@@ -136,61 +136,6 @@ def decode_spans(
     return out
 
 
-def span_iou(a: tuple[int, int], b: tuple[int, int]) -> float:
-    """IoU of half-open integer spans (ref Inference/EntityExtractor.swift:68-83)."""
-    inter_start = max(a[0], b[0])
-    inter_end = min(a[1], b[1])
-    if inter_start >= inter_end:
-        return 0.0
-    inter = inter_end - inter_start
-    union = (a[1] - a[0]) + (b[1] - b[0]) - inter
-    return inter / union
-
-
-def decode_spans_legacy(
-    logits: np.ndarray,
-    labels: list[str],
-    threshold: float,
-    text: str,
-    spans: list[tuple[int, int]],
-    nms_threshold: float = 0.5,
-) -> list[Entity]:
-    """GLiNER-v1-style decode kept available as config (the reference keeps
-    this path as dead code + Configuration.nmsThreshold): sigmoid >=
-    threshold -> greedy by score desc, but suppression is PER LABEL and
-    only when IoU > nms_threshold (ref Inference/EntityExtractor.swift:20-83).
-    Overlapping spans of different labels BOTH survive here, unlike the
-    active flat-NMS path."""
-    n_words = len(spans)
-    if n_words == 0 or not labels or logits.size == 0:
-        return []
-    probs = sigmoid(logits)
-    keep = np.argwhere(probs >= threshold)
-    candidates = []
-    for s, w, li in keep:
-        e = s + w
-        if e >= n_words:
-            continue
-        candidates.append((int(s), int(e), int(li), float(probs[s, w, li])))
-    if not candidates:
-        return []
-    candidates.sort(key=lambda c: -c[3])
-    chosen: list[tuple[int, int, int, float]] = []
-    for s, e, li, score in candidates:
-        dup = False
-        for cs, ce, cli, _ in chosen:
-            if cli == li and span_iou((s, e + 1), (cs, ce + 1)) > nms_threshold:
-                dup = True
-                break
-        if not dup:
-            chosen.append((s, e, li, score))
-    out = []
-    for s, e, li, score in chosen:
-        cs, ce = spans[s][0], spans[e][1]
-        out.append(Entity(text[cs:ce], labels[li], score, cs, ce))
-    return out
-
-
 def greedy_select_candidates(
     candidates: list[tuple[int, int, int, float]],
 ) -> list[tuple[int, int, int, float]]:

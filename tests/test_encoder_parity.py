@@ -49,11 +49,15 @@ FIXTURES = Path(
 )
 
 pytestmark = pytest.mark.skipif(
-    not FIXTURES.exists(), reason="reference fixtures not available"
+    not FIXTURES.exists(),
+    reason="reference absent: encoder parity needs its python_outputs.json",
 )
 
 
 def _cases() -> list:
+    # called at collection (fixture params), before the skipif applies
+    if not FIXTURES.exists():
+        return []
     with open(FIXTURES) as f:
         return json.load(f)["test_cases"]
 

@@ -103,16 +103,3 @@ def test_structure_count_capping(spark):
     ).collect()[0]
     assert len(uncapped.value.split("|")) == 4
     assert len(capped.value.split("|")) == 2  # first predicted_count kept
-
-
-def test_text_file_chunk_source(spark, tmp_path):
-    from glinerswift_spark.sources.pages import read_text_file_chunks
-
-    p = tmp_path / "long.txt"
-    p.write_text(" ".join(f"w{i}" for i in range(500)))
-    chunks = read_text_file_chunks(
-        spark, str(p), max_chars=600, overlap=0, max_words=240
-    ).collect()
-    assert len(chunks) > 1
-    joined = " ".join(c.text for c in sorted(chunks, key=lambda c: c.chunk_idx))
-    assert joined.split() == p.read_text().split()

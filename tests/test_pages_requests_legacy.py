@@ -1,5 +1,5 @@
 """pages-table path (input_hint shape), per-request-labels extraction
-(reference JSONL fixture format), legacy GLiNER-v1 decode variants,
+(reference JSONL fixture format), legacy GLiNER-v1 scoring variants,
 per-label thresholds, skew handling, resume-from-partial."""
 
 import pathlib
@@ -23,7 +23,6 @@ from glinerswift_spark.scoring.backends import (
     HashEmbeddingSpec,
     flagship_gazetteer,
 )
-from glinerswift_spark.scoring.core import decode_spans_legacy, logit, span_iou
 from glinerswift_spark.sources.pages import (
     documents_as_pages,
     extract_pages_text,
@@ -33,7 +32,6 @@ from glinerswift_spark.sources.pages import (
 )
 
 FIXTURE_JSONL = str(pathlib.Path(__file__).resolve().parents[1] / "fixtures" / "quick_fixtures.jsonl")
-NEG = -1e30
 
 
 # ---- pages path ----------------------------------------------------------
@@ -94,24 +92,7 @@ def test_per_request_labels_jsonl(spark):
     assert all(lb != "chemical" for _, lb in by_id["test_01"])
 
 
-# ---- legacy decode variants ----------------------------------------------
-
-def test_span_iou_values():
-    assert span_iou((0, 10), (0, 10)) == 1.0
-    assert span_iou((0, 10), (10, 20)) == 0.0
-    assert span_iou((0, 6), (4, 10)) == pytest.approx(2 / 10)
-
-
-def test_legacy_iou_nms_per_label():
-    text = "New York City"
-    ws = word_spans(text)
-    lg = np.full((3, 8, 2), NEG)
-    lg[0, 2, 0] = logit(0.9)   # "New York City" label a
-    lg[0, 1, 0] = logit(0.8)   # "New York" label a — IoU 2/3 > 0.5 -> dropped
-    lg[0, 2, 1] = logit(0.7)   # same span, label b — SURVIVES (per-label NMS)
-    got = decode_spans_legacy(lg, ["a", "b"], 0.3, text, ws, nms_threshold=0.5)
-    assert {(g.text, g.label) for g in got} == {("New York City", "a"), ("New York City", "b")}
-
+# ---- legacy scoring variants ---------------------------------------------
 
 def test_legacy_pooling_and_similarity_variants():
     text = "alpha beta gamma"

@@ -57,7 +57,8 @@ DUMP_FILES = [
 ]
 
 pytestmark = pytest.mark.skipif(
-    not DEBUG_DIR.exists(), reason="reference debug dumps not available"
+    not DEBUG_DIR.exists(),
+    reason="reference absent: real-tensor parity needs its debug dumps",
 )
 
 

@@ -4,7 +4,6 @@ import pytest
 
 from glinerswift_spark.config import RelationConfig
 from glinerswift_spark.operators.extract import extract_entities
-from glinerswift_spark.operators.nms import dedup_chunk_entities, nms_entities
 from glinerswift_spark.operators.relations import entities_to_triples
 from glinerswift_spark.plans.kg_pipeline import extract_triples_fused, extract_and_link
 from glinerswift_spark.scoring.backends import (
@@ -49,34 +48,6 @@ def test_fused_triples_equal_composable_triples(spark, docs):
     key = lambda r: (r.doc_id, r.subj, r.pred, r.obj, round(r.score, 9))
     assert sorted(map(key, fused.collect())) == sorted(map(key, composed.collect()))
     assert fused.count() > 0
-
-
-def test_nms_operator_matches_decode_semantics(spark):
-    rows = [
-        (1, "a", "New York City", 0.9, 0, 13),
-        (1, "b", "York", 0.8, 4, 8),
-        (1, "a", "Boston", 0.7, 20, 26),
-        (2, "a", "x", 0.5, 0, 1),
-        (2, "b", "x", 0.6, 0, 1),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, label string, entity string, score double, start int, end int")
-    got = sorted(
-        (r.doc_id, r.entity, r.label)
-        for r in nms_entities(df, ["doc_id"]).collect()
-    )
-    assert got == [(1, "Boston", "a"), (1, "New York City", "a"), (2, "x", "b")]
-
-
-def test_chunk_dedup_operator(spark):
-    rows = [
-        (1, "org", "Apple Inc.", 0.9, 20, 30),
-        (1, "org", "apple inc.", 0.7, 500, 510),   # same-label lowered dup
-        (1, "person", "Apple Inc.", 0.8, 20, 30),  # other label survives
-        (1, "loc", "Cupertino", 0.6, 25, 34),      # overlap, other label
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, label string, entity string, score double, start int, end int")
-    got = sorted((r.label, r.start) for r in dedup_chunk_entities(df, ["doc_id"]).collect())
-    assert got == [("loc", 25), ("org", 20), ("person", 20)]
 
 
 def test_relation_templating_semantics(spark):
@@ -225,3 +196,10 @@ def test_widen_waves_selected_per_backend(spark, tmp_path):
     ).coalesce(1)
     chunky_big = extract_entities(big, ["person"], spec, threshold=0.3)
     assert chunky_big.rdd.getNumPartitions() == STRAGGLER_WAVES * cores
+    # above the row-count probe's cap (limit(n_big)): same full widening
+    above = spark.createDataFrame(
+        [(i, "john smith works at apple") for i in range(3 * n_big)],
+        "doc_id long, text string",
+    ).coalesce(1)
+    chunky_above = extract_entities(above, ["person"], spec, threshold=0.3)
+    assert chunky_above.rdd.getNumPartitions() == STRAGGLER_WAVES * cores

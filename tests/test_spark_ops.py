@@ -72,6 +72,20 @@ def test_ngram_jaccard_exact_values(spark):
     assert (1, 3) not in got
 
 
+def test_duplicate_doc_ids_yield_no_self_pairs(spark):
+    # dirty input: doc 1 appears twice with the same text; the pair
+    # expansion sees the id next to itself in the sorted postings
+    t = "the quick brown fox jumps over the lazy dog"
+    u = "an entirely unrelated sentence with other words"
+    df = spark.createDataFrame(
+        [(1, t), (1, t), (2, u)], "doc_id long, text string"
+    )
+    jac = ngram_jaccard_pairs(df, n=3, threshold=0.0, max_df=1000).collect()
+    lsh = minhash_candidate_pairs(df).collect()
+    assert [r for r in jac if r.doc_a == r.doc_b] == []
+    assert [r for r in lsh if r.doc_a == r.doc_b] == []
+
+
 def test_embedding_neardup_and_topk(spark, emb):
     pairs = embedding_neardup_pairs(emb, threshold=0.4)
     for r in pairs.collect():
