@@ -208,6 +208,12 @@ def ngram_jaccard_pairs(
     below); the second term joins only the high-df slice of the exploded
     relation (boilerplate — a few shingles per doc) restricted to
     candidate pairs.
+
+    Duplicate ids: the df guard counts distinct ids and the (doc,
+    shingle) postings are deduplicated, so rows that repeat an id with
+    the same text count as one document. An id repeated with DIFFERENT
+    texts has no single shingle set; ids are expected to be unique
+    there (dedup them at input).
     """
     from pyspark import StorageLevel
 
@@ -223,7 +229,9 @@ def ngram_jaccard_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    dfreq = exz.groupBy("sh").count()
+    # distinct ids, so a repeated id counts once here too (see
+    # "Duplicate ids")
+    dfreq = exz.groupBy("sh").agg(F.countDistinct(id_col).alias("count"))
     # guarded = df <= max_df AND df >= 2: a shingle appearing in ONE doc
     # can be shared by no pair, contributes nothing to any intersection
     # count (per-doc set sizes ride in __z, not in this relation), and
@@ -243,10 +251,11 @@ def ngram_jaccard_pairs(
     # exact same rows straight out of the grouped partition, with the
     # (sh -> postings) groupBy riding the df-guard join's partitioning,
     # so no new exchange). Per-shingle expansion width <= C(max_df, 2)
-    # structs — the same quadratic the guard already bounds.
+    # structs — the same quadratic the guard already bounds. Postings
+    # are a SET so a repeated id counts once (see "Duplicate ids").
     grouped = ex.groupBy("sh").agg(
         F.array_sort(
-            F.collect_list(F.struct(F.col(id_col).alias("d"), F.col("__z").alias("z")))
+            F.collect_set(F.struct(F.col(id_col).alias("d"), F.col("__z").alias("z")))
         ).alias("__ds")
     )
     inc = _pair_expansion(

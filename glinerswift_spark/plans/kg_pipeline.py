@@ -13,7 +13,13 @@ Two equivalent shapes:
 ``build_kg``
     the composable version: extract -> triples (self-join) -> linking ->
     connected components -> nodes/edges. Each stage is a pure
-    DataFrame -> DataFrame transform (foreachBatch-compatible).
+    DataFrame -> DataFrame transform (foreachBatch-compatible), except
+    one: ``attach_embeddings`` returns the mentions relation as a
+    materialized lineage cut. Every linking output (surfaces, mention
+    map, nodes, edges) and the job's mentions snapshot reads mentions,
+    and Spark reuses no common subexpression across those plans, so a
+    lazy mentions relation would replay the extraction UDF in each of
+    them.
 """
 
 from __future__ import annotations
@@ -167,7 +173,11 @@ def attach_embeddings(
     documents; distinct surfaces get pseudo-random vectors. md5 (not
     xxhash64) so the DuckDB oracle replays the assignment exactly:
     CAST(concat('0x', substring(md5(surface), 1, 8)) AS BIGINT) % N.
-    The embeddings side is broadcast (it is the small dimension table)."""
+    The embeddings side is broadcast (it is the small dimension table).
+
+    Returns a materialized lineage cut, not a lazy plan, so calling it
+    runs one Spark job: the whole KG tail fans out from mentions, and the
+    cut runs extraction once instead of once per consumer."""
     if n_vecs is None:
         n_vecs = embeddings.count()
     keyed = mentions.withColumn(
@@ -180,7 +190,13 @@ def attach_embeddings(
         ),
     )
     emb = embeddings.select("vec_id", "embedding")
-    return keyed.join(F.broadcast(emb), "vec_id", "left").drop("vec_id")
+    # a cut, not persist(): a persisted plan stays in the cache manager,
+    # and once its blocks are unpersisted by handle every consumer replays
+    return (
+        keyed.join(F.broadcast(emb), "vec_id", "left")
+        .drop("vec_id")
+        .localCheckpoint(eager=True)
+    )
 
 
 def build_kg(
@@ -198,8 +214,10 @@ def build_kg(
 ) -> dict:
     """Full north-rule pipeline: documents -> entities -> triples ->
     linking -> connected components -> nodes/edges. Returns every
-    intermediate as a DataFrame (each a pure transform; see
-    operators/checkpoint.py for the resumable materialization wrapper).
+    intermediate as a DataFrame, each a pure transform except
+    ``mentions``: it is the lineage cut attach_embeddings makes, so this
+    call runs one eager Spark job (extraction + embedding join). See
+    operators/checkpoint.py for the resumable materialization wrapper.
     ``entities`` (optional) skips the extraction stage — see
     extract_and_link."""
     from glinerswift_spark.config import LinkingConfig
@@ -265,6 +283,9 @@ def update_kg(
     union. Deterministic ids (mention_id = 'doc:start:end:label',
     canonical = min id) make the re-link reproduce the full build's ids
     exactly — re-running a batch is idempotent, per the north rule.
+
+    The new batch's mentions are a lineage cut (see attach_embeddings),
+    so this call runs one eager Spark job over the new documents.
     """
     from glinerswift_spark.config import LinkingConfig
     from glinerswift_spark.operators.graph import (

@@ -150,9 +150,10 @@ def test_kill_between_cc_rounds(spark, tmp_path, clean_run, monkeypatch):
 
     def flaky_lc(self, eager=True):
         calls["n"] += 1
-        # calls 1-3 are base/sym/seed; call 4 is the END of hash-min
+        # call 1 is the mentions lineage cut (attach_embeddings), calls
+        # 2-4 are CC's base/sym/seed; call 5 is the END of hash-min
         # round 1 — raising here is a kill between CC rounds
-        if calls["n"] == 4:
+        if calls["n"] == 5:
             raise RuntimeError("injected kill: between CC rounds")
         return real_lc(self, eager=eager)
 
@@ -160,7 +161,7 @@ def test_kill_between_cc_rounds(spark, tmp_path, clean_run, monkeypatch):
     with pytest.raises(Exception, match="between CC rounds"):
         _publish(spark, _docs(spark), out, fail_before=None)
     monkeypatch.setattr(DataFrame, "localCheckpoint", real_lc)
-    assert calls["n"] >= 4
+    assert calls["n"] >= 5
     _publish(spark, _docs(spark), out)  # clean retry
     assert _final_tables(spark, out) == clean_run
 

@@ -83,3 +83,42 @@ def test_incremental_update_equals_full_rebuild(spark, sf_dir):
     assert edge_set(upd) == edge_set(full)
     # and the incremental result is non-trivial (new docs contributed)
     assert edge_set(prior) != edge_set(full)
+
+
+def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
+    """The KG tail as perfbench's kg_build and jobs/run_kg.py build it:
+    attach_embeddings returns a lineage cut, so the executed plans of
+    nodes and edges read materialized mentions and hold no extraction
+    UDF (a lazy mentions relation puts MapInPandas 3x into nodes and 6x
+    into edges). executedPlan plans the query without running it."""
+    from glinerswift_spark.operators.extract import extract_entities
+    from glinerswift_spark.operators.graph import (
+        materialize_edges,
+        mentions_from_entities,
+        surface_to_canonical,
+    )
+    from glinerswift_spark.operators.linking import link_mentions
+    from glinerswift_spark.plans.kg_pipeline import (
+        attach_embeddings,
+        extract_triples_fused,
+    )
+    from glinerswift_spark.sources.pages import write_table
+
+    docs = read_documents(spark, sf_dir).where(F.col("doc_id") < 40)
+    spec = flagship_gazetteer()
+    out = str(tmp_path / "triples")
+    write_table(
+        extract_triples_fused(docs, FLAGSHIP_LABELS, spec, threshold=0.5), out
+    )
+    entities = extract_entities(
+        docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
+    )
+    mentions = attach_embeddings(
+        mentions_from_entities(entities), read_embeddings(spark, sf_dir)
+    )
+    mention_map, nodes, _ = link_mentions(mentions)
+    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
+    edges = materialize_edges(spark.read.parquet(out), surface_map)
+    for df in (nodes, edges):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 0

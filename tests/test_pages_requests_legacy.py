@@ -32,6 +32,7 @@ from glinerswift_spark.sources.pages import (
 )
 
 FIXTURE_JSONL = str(pathlib.Path(__file__).resolve().parents[1] / "fixtures" / "quick_fixtures.jsonl")
+RUN_KG = str(pathlib.Path(__file__).resolve().parents[1] / "jobs" / "run_kg.py")
 
 
 # ---- pages path ----------------------------------------------------------
@@ -244,7 +245,7 @@ def test_run_kg_incremental_prior_equals_full(spark, tmp_path):
 
     def run(inp, out, prior=None, analytics=False):
         cmd = [
-            sys.executable, "/root/repo/jobs/run_kg.py",
+            sys.executable, RUN_KG,
             "--input", inp, "--output", out,
             "--embeddings", "/root/testdata/sf0.001/embeddings.parquet",
             "--threshold", "0.5", "--buckets", "8",

@@ -86,6 +86,21 @@ def test_duplicate_doc_ids_yield_no_self_pairs(spark):
     assert [r for r in lsh if r.doc_a == r.doc_b] == []
 
 
+def test_ngram_jaccard_duplicate_doc_id_counts_once(spark):
+    # a doc id repeated with the same text is one document: its shingle
+    # postings must not count once per copy (that gave jaccard 2.0)
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (1, "a b c d e"), (2, "a b c d x")],
+        "doc_id long, text string",
+    )
+    # max_df=2 puts the shared shingles (3 rows, 2 docs) at the df-guard
+    # edge: counting copies would move them to the high-df slice and
+    # drop the pair from the candidates
+    for kw in ({}, {"hi_chunks": 4}, {"max_df": 2}):
+        rows = ngram_jaccard_pairs(df, n=3, threshold=0.0, **kw).collect()
+        assert [(r.doc_a, r.doc_b, r.jaccard) for r in rows] == [(1, 2, 0.5)]
+
+
 def test_embedding_neardup_and_topk(spark, emb):
     pairs = embedding_neardup_pairs(emb, threshold=0.4)
     for r in pairs.collect():
