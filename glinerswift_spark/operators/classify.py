@@ -178,39 +178,6 @@ def classify_documents_multi(
     return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
 
 
-def top_prediction(classified: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Top-1 per document (ref GLiNER2.swift:330-332)."""
-    return classified.where(F.col("is_top")).select(
-        id_col, "task", F.col("label").alias("top_label"), "score"
-    )
-
-
-def project_dtype(
-    entities: DataFrame, dtype: str, id_cols: list[str] | None = None
-) -> DataFrame:
-    """dtype "str" -> FIRST match per (doc, label) in final entity order
-    (start asc, score desc — the SpanDecoder output order); "list" -> all
-    matches collected in that order (ref GLiNER2.swift:107-118).
-
-    DELIBERATE DIVERGENCE from the reference on chunked documents: the
-    reference's validEntities.first consumes the extractor's post-merge
-    order, which after a multi-chunk merge is score-DESCENDING, so its
-    'str' pick can differ from the single-chunk (start asc) order on long
-    documents. This engine re-sorts to the documented (start asc, score
-    desc) order for EVERY document, chunked or not — one deterministic,
-    SQL-replayable rule instead of an order that depends on whether the
-    document happened to chunk."""
-    id_cols = list(id_cols or ["doc_id"])
-    ordered = F.sort_array(
-        F.collect_list(F.struct(F.col("start"), (-F.col("score")).alias("negscore"), F.col("entity")))
-    )
-    agg = entities.groupBy(*id_cols, "label").agg(ordered.alias("__o"))
-    values = F.transform(F.col("__o"), lambda s: s["entity"])
-    if dtype == "str":
-        return agg.select(*id_cols, "label", F.element_at(values, 1).alias("value"))
-    return agg.select(*id_cols, "label", values.alias("values"))
-
-
 def predict_structure_counts(
     df: DataFrame,
     structure_name: str,

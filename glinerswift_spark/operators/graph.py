@@ -289,8 +289,8 @@ def edge_diff(
     """Snapshot diff between two materialized KG edge tables:
     (src_id, pred, dst_id, status, weight_old, weight_new) with status
     in {added, removed, kept} — the audit surface for incremental crawl
-    updates (plans/kg_pipeline.update_kg). 'removed' is REAL even when
-    the new corpus is a superset of the old: min-mention-id
+    updates (plans/kg_pipeline.build_kg with prior=). 'removed' is REAL
+    even when the new corpus is a superset of the old: min-mention-id
     canonicalization can re-root a cluster once a smaller mention id
     joins it, moving every incident edge to a new node id.
 

@@ -11,7 +11,9 @@ Two equivalent shapes:
     (much smaller) downstream graph stages.
 
 ``build_kg``
-    the composable version: extract -> triples (self-join) -> linking ->
+    the one place the KG stage sequence is written: extract (skipped when
+    the caller passes ``entities``) -> triples (self-join) -> fold of a
+    prior snapshot (when the caller passes ``prior``) -> linking ->
     connected components -> nodes/edges. Each stage is a pure
     DataFrame -> DataFrame transform (foreachBatch-compatible), except
     one: ``attach_embeddings`` returns the mentions relation as a
@@ -131,38 +133,6 @@ def extract_triples_fused(
     )
 
 
-def extract_and_link(
-    documents: DataFrame,
-    labels: list[str],
-    backend_spec,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    threshold: float | None = None,
-    config: Configuration = DEFAULT_CONFIG,
-    relation_cfg: RelationConfig | None = None,
-    entities: DataFrame | None = None,
-):
-    """Composable flagship: returns (entities, triples) DataFrames.
-
-    ``entities`` injects a precomputed (possibly persisted) extraction
-    relation — extraction is per-document, so a caller holding one
-    session-cached pass can fan out N downstream analytics without
-    paying N extraction re-runs (Spark shares no common subexpressions
-    across separately-built DataFrames)."""
-    if entities is None:
-        entities = extract_entities(
-            documents,
-            labels,
-            backend_spec,
-            text_col=text_col,
-            id_cols=[doc_col],
-            threshold=threshold,
-            config=config,
-        )
-    triples = entities_to_triples(entities, relation_cfg, doc_col=doc_col)
-    return entities, triples
-
-
 def attach_embeddings(
     mentions: DataFrame, embeddings: DataFrame, n_vecs: int | None = None
 ) -> DataFrame:
@@ -211,16 +181,34 @@ def build_kg(
     relation_cfg: RelationConfig | None = None,
     linking_cfg=None,
     entities: DataFrame | None = None,
+    prior: tuple[DataFrame, DataFrame] | None = None,
 ) -> dict:
     """Full north-rule pipeline: documents -> entities -> triples ->
     linking -> connected components -> nodes/edges. Returns every
-    intermediate as a DataFrame, each a pure transform except
-    ``mentions``: it is the lineage cut attach_embeddings makes, so this
-    call runs one eager Spark job (extraction + embedding join). See
-    operators/checkpoint.py for the resumable materialization wrapper.
-    ``entities`` (optional) skips the extraction stage — see
-    extract_and_link."""
-    from glinerswift_spark.config import LinkingConfig
+    intermediate as a DataFrame. The call runs one eager Spark job, the
+    mentions lineage cut attach_embeddings makes (extraction + embedding
+    join), then the connected-components rounds inside link_mentions;
+    the rest is lazy, and no plan built on ``mentions`` replays
+    extraction.
+
+    ``entities`` injects a precomputed extraction relation (persisted,
+    or a checkpointed stage read back from parquet) and skips
+    extraction, so a caller holding one materialized pass fans out
+    without re-extracting.
+
+    ``prior=(mentions, triples)`` folds in a previous build's published
+    snapshot: ``documents`` (or ``entities``) is then only the new crawl
+    batch, extraction runs on it alone, and the global stages (LSH
+    blocking + cosine verify + connected components + node/edge
+    aggregation) re-run over the union, because linking is
+    corpus-global (a new mention can merge two old clusters). The
+    result equals a full rebuild: extraction is per-document, every
+    later stage is a pure function of the union, and deterministic ids
+    (mention_id = 'doc:start:end:label', canonical = min id) make the
+    re-link reproduce the full build's ids exactly (pinned by
+    tests/test_kg_pipeline.py::test_incremental_update_equals_full_rebuild).
+    With a prior, ``mentions`` and ``triples`` are cumulative and
+    ``entities`` is the new batch's."""
     from glinerswift_spark.operators.graph import (
         materialize_edges,
         mentions_from_entities,
@@ -228,16 +216,25 @@ def build_kg(
     )
     from glinerswift_spark.operators.linking import link_mentions
 
-    lcfg = linking_cfg or LinkingConfig()
-    entities, triples = extract_and_link(
-        documents, labels, backend_spec,
-        text_col=text_col, doc_col=doc_col, threshold=threshold,
-        config=config, relation_cfg=relation_cfg, entities=entities,
-    )
+    if entities is None:
+        entities = extract_entities(
+            documents,
+            labels,
+            backend_spec,
+            text_col=text_col,
+            id_cols=[doc_col],
+            threshold=threshold,
+            config=config,
+        )
     mentions = attach_embeddings(
         mentions_from_entities(entities, doc_col), embeddings
     )
-    mention_map, nodes, verified = link_mentions(mentions, lcfg)
+    triples = entities_to_triples(entities, relation_cfg, doc_col=doc_col)
+    if prior is not None:
+        prior_mentions, prior_triples = prior
+        mentions = prior_mentions.unionByName(mentions)
+        triples = prior_triples.unionByName(triples)
+    mention_map, nodes, verified = link_mentions(mentions, linking_cfg)
     surface_map = surface_to_canonical(
         mentions.join(mention_map, "mention_id")
     )
@@ -246,74 +243,6 @@ def build_kg(
         "entities": entities,
         "triples": triples,
         "mentions": mentions,
-        "mention_map": mention_map,
-        "nodes": nodes,
-        "edges": edges,
-        "verified_pairs": verified,
-    }
-
-
-def update_kg(
-    prior_mentions: DataFrame,
-    prior_triples: DataFrame,
-    new_documents: DataFrame,
-    embeddings: DataFrame,
-    labels: list[str],
-    backend_spec,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    threshold: float | None = None,
-    config: Configuration = DEFAULT_CONFIG,
-    relation_cfg: RelationConfig | None = None,
-    linking_cfg=None,
-) -> dict:
-    """Incremental KG maintenance: a new crawl batch arrives AFTER a full
-    build. Extraction — the dominant cost, mapInPandas over every page —
-    runs ONLY on the new documents; the prior run's materialized
-    `mentions` / `triples` relations (parquet from the checkpointed
-    stages) are unioned in, and the comparatively cheap GLOBAL stages
-    (LSH blocking + cosine verify + connected components + node/edge
-    aggregation) re-run over the union, because linking is inherently
-    corpus-global (a new mention can merge two old clusters).
-
-    Equivalence to a full rebuild is structural, and pinned by test
-    (tests/test_kg_pipeline.py::test_incremental_update_equals_full_rebuild):
-    extraction is per-document (old docs' mentions/triples are identical
-    either way) and every downstream stage is a pure function of the
-    union. Deterministic ids (mention_id = 'doc:start:end:label',
-    canonical = min id) make the re-link reproduce the full build's ids
-    exactly — re-running a batch is idempotent, per the north rule.
-
-    The new batch's mentions are a lineage cut (see attach_embeddings),
-    so this call runs one eager Spark job over the new documents.
-    """
-    from glinerswift_spark.config import LinkingConfig
-    from glinerswift_spark.operators.graph import (
-        materialize_edges,
-        mentions_from_entities,
-        surface_to_canonical,
-    )
-    from glinerswift_spark.operators.linking import link_mentions
-
-    lcfg = linking_cfg or LinkingConfig()
-    new_entities, new_triples = extract_and_link(
-        new_documents, labels, backend_spec,
-        text_col=text_col, doc_col=doc_col, threshold=threshold,
-        config=config, relation_cfg=relation_cfg,
-    )
-    new_mentions = attach_embeddings(
-        mentions_from_entities(new_entities, doc_col), embeddings
-    )
-    mentions = prior_mentions.unionByName(new_mentions)
-    triples = prior_triples.unionByName(new_triples)
-    mention_map, nodes, verified = link_mentions(mentions, lcfg)
-    surface_map = surface_to_canonical(
-        mentions.join(mention_map, "mention_id")
-    )
-    edges = materialize_edges(triples, surface_map, doc_col)
-    return {
-        "mentions": mentions,
-        "triples": triples,
         "mention_map": mention_map,
         "nodes": nodes,
         "edges": edges,

@@ -141,12 +141,6 @@ def documents_as_pages(docs: DataFrame) -> DataFrame:
     )
 
 
-def read_fixture_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Benchmark fixture JSONL {id, text, labels, threshold}
-    (ref Scripts/test_fixtures.jsonl; BenchmarkCLI decodeFixtures)."""
-    return spark.read.json(path)
-
-
 def repartition_salted(
     df: DataFrame, key_col: str = "url", num_partitions: int | None = None
 ) -> DataFrame:
@@ -208,46 +202,3 @@ def write_table_iceberg(
         if partition_by:
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
         w.createOrReplace()
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_col: str = "doc_id",
-    fmt: str = "parquet",
-) -> None:
-    """Deterministic training-shard writer: shard = md5-bucket of the row
-    key, rows ordered within a shard by (md5(key), key). The assignment
-    and order are pure functions of the data — independent of input
-    partitioning, cluster size, and retries — so two runs produce
-    byte-stable shard contents, and a downstream trainer reading shard k
-    sees a fixed, globally-shuffled (hash-ordered) stream: the standard
-    "shuffle once at write time" layout for sequential training reads.
-
-    Scale shape: ONE hash-partitioned exchange into exactly n_shards
-    partitions + an in-partition sort (no global sort barrier);
-    each shard is one file (maxRecordsPerFile can split further without
-    breaking determinism of content).
-    """
-    from glinerswift_spark.operators.sampling import hash_bucket
-
-    key = F.col(key_col)
-    # Sort leads with __shard: the dynamic-partition writer REQUIRES an
-    # ordering on partition columns and inserts its own (unstable) sort
-    # when the child doesn't already provide it — leading with __shard
-    # satisfies that requirement, so the (__ord, key) order survives into
-    # the written files.
-    out = (
-        df.withColumn("__shard", hash_bucket(key, n_shards))
-        .withColumn("__ord", F.md5(key.cast("string")))
-        .repartition(n_shards, "__shard")
-        .sortWithinPartitions("__shard", "__ord", key_col)
-        .drop("__ord")
-    )
-    (
-        out.write.mode("overwrite")
-        .format(fmt)
-        .partitionBy("__shard")
-        .save(path)
-    )

@@ -1,14 +1,32 @@
-"""spark-submit entrypoint: full KG construction with resumable checkpoints.
+"""spark-submit entrypoint: full KG construction with a resumable extraction stage.
 
     spark-submit --py-files dist/glinerswift_spark.zip jobs/run_kg.py \
         --input /path/to/pages_or_documents --output /path/to/kg \
         [--input-format parquet|iceberg] [--doc-col doc_id] [--text-col text] \
-        [--threshold 0.5] [--buckets 64] [--salt-partitions N]
+        [--threshold 0.5] [--buckets 64] [--salt-partitions N] \
+        [--prior /path/to/previous/kg] [--analytics]
 
-Stages (each a write-audit-publish checkpointed step; re-running resumes
-from the last completed bucket set):
-  1. triples   — fused extraction (zero-shuffle mapInPandas)
-  2. nodes/edges — linking + connected components + materialization
+Stages:
+  1. entities — the job's one extraction pass, a write-audit-publish
+     checkpointed step: re-running resumes from the last completed
+     bucket set
+  2. plans/kg_pipeline.build_kg over the checkpointed entities:
+     triples, the --prior fold, linking + connected components,
+     nodes/edges
+
+Output layout under --output:
+  entities/          the stage-1 checkpoint, partitioned by part_bucket
+  _STATUS/           per-bucket done rows of stage 1
+  mentions/ triples/ cumulative snapshots (with --prior: the prior's plus
+                     this batch's); the next --prior run reads these two
+  nodes/ edges/      the KG
+  pagerank/ degree/ communities/ kcore3/   with --analytics
+
+--prior must name an output of this layout other than --output. Outputs
+of earlier versions of this job are not valid priors: their triples/
+was the extraction checkpoint, and an incremental run kept its
+cumulative triples in triples_all/ while triples/ held only its own
+batch. Rebuild such a KG once without --prior.
 """
 
 import argparse
@@ -44,27 +62,18 @@ def main():
     ap.add_argument(
         "--prior", default=None,
         help="previous run's --output dir: treat --input as ONLY the new "
-             "crawl batch, extract just it, union the prior run's "
-             "materialized mentions/triples, and re-run the global "
-             "linking/canonicalization stages (incremental KG update; "
-             "equals a full rebuild — plans/kg_pipeline.update_kg)",
+             "crawl batch, extract just it, fold in the prior run's "
+             "mentions/triples, and re-run the global linking/"
+             "canonicalization stages (incremental KG update; equals a "
+             "full rebuild — plans/kg_pipeline.build_kg prior=)",
     )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession, functions as F
 
     from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
-    from glinerswift_spark.plans.kg_pipeline import (
-        attach_embeddings,
-        extract_triples_fused,
-    )
     from glinerswift_spark.operators.extract import extract_entities
-    from glinerswift_spark.operators.graph import (
-        materialize_edges,
-        mentions_from_entities,
-        surface_to_canonical,
-    )
-    from glinerswift_spark.operators.linking import link_mentions
+    from glinerswift_spark.plans.kg_pipeline import build_kg
     from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
     from glinerswift_spark.sources.pages import read_pages, repartition_salted, write_table
 
@@ -83,62 +92,35 @@ def main():
 
     spec = flagship_gazetteer()
 
-    # stage 1: triples (checkpointed per bucket; resumes idempotently)
-    triples = run_stage_with_checkpoint(
+    # stage 1: entities (checkpointed per bucket; resumes idempotently)
+    entities = run_stage_with_checkpoint(
         spark,
         docs,
-        lambda d: extract_triples_fused(
+        lambda d: extract_entities(
             d, FLAGSHIP_LABELS, spec,
-            text_col=args.text_col, doc_col=args.doc_col,
+            text_col=args.text_col, id_cols=[args.doc_col],
             threshold=args.threshold,
         ),
-        args.output, "triples", args.doc_col, num_buckets=args.buckets,
+        args.output, "entities", args.doc_col, num_buckets=args.buckets,
         lineage=f"input={args.input}",
-    )
+    ).drop("part_bucket")
 
-    # stage 2: entities -> linking -> nodes/edges
-    entities = extract_entities(
-        docs, FLAGSHIP_LABELS, spec,
-        text_col=args.text_col, id_cols=[args.doc_col],
-        threshold=args.threshold,
-    )
+    # stage 2: every KG table reads the checkpointed entities
     emb_path = args.embeddings or os.path.join(
         os.path.dirname(args.input.rstrip("/")), "embeddings.parquet"
     )
-    embeddings = spark.read.parquet(emb_path)
-    mentions = attach_embeddings(
-        mentions_from_entities(entities, args.doc_col), embeddings
-    )
-    triples_flat = triples.drop("part_bucket")
+    prior = None
     if args.prior:
-        # incremental: this run extracted ONLY the new batch; fold in the
-        # prior snapshot and re-run the (corpus-global) linking stages —
-        # a new mention can merge two old clusters, so linking cannot be
-        # per-batch. Deterministic min-id canonicalization makes the
-        # result identical to a full rebuild (pinned by
-        # tests/test_kg_pipeline.py::test_incremental_update_equals_full_rebuild).
-        # A chained prior (itself incremental) carries its cumulative
-        # triples in triples_all; a full-build prior's checkpointed
-        # triples stage IS the full set.
-        p_all = os.path.join(args.prior, "triples_all")
-        p_tri = p_all if os.path.isdir(p_all) else os.path.join(args.prior, "triples")
-        mentions = spark.read.parquet(
-            os.path.join(args.prior, "mentions")
-        ).unionByName(mentions)
-        triples_flat = (
-            spark.read.parquet(p_tri).drop("part_bucket").unionByName(triples_flat)
+        prior = tuple(
+            spark.read.parquet(os.path.join(args.prior, t))
+            for t in ("mentions", "triples")
         )
-        # cumulative snapshot so the NEXT incremental run can chain
-        write_table(triples_flat, os.path.join(args.output, "triples_all"))
-        triples_flat = spark.read.parquet(os.path.join(args.output, "triples_all"))
-    mention_map, nodes, _ = link_mentions(mentions)
-    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
-    edges = materialize_edges(triples_flat, surface_map, args.doc_col)
-
-    # the mentions snapshot is what the NEXT incremental run unions with
-    write_table(mentions, os.path.join(args.output, "mentions"))
-    write_table(nodes, os.path.join(args.output, "nodes"))
-    write_table(edges, os.path.join(args.output, "edges"))
+    kg = build_kg(
+        docs, spark.read.parquet(emb_path), FLAGSHIP_LABELS, spec,
+        doc_col=args.doc_col, entities=entities, prior=prior,
+    )
+    for t in ("mentions", "triples", "nodes", "edges"):
+        write_table(kg[t], os.path.join(args.output, t))
     n_nodes = spark.read.parquet(os.path.join(args.output, "nodes")).count()
     n_edges = spark.read.parquet(os.path.join(args.output, "edges")).count()
     print(f"KG complete: {n_nodes} nodes, {n_edges} edges -> {args.output}")

@@ -6,15 +6,16 @@ resumable stages. The existing tests kill inside one checkpointed stage
 (test_spark_ops / test_pages_requests_legacy); these kill at the
 BOUNDARIES the judge called out:
 
-  1. after the triples checkpoint stage, before any linking output —
+  1. after the entities checkpoint stage, before any linking output —
      resume must skip every done bucket and still publish identical
      nodes/edges;
   2. BETWEEN connected-components rounds (mid-linking kill, injected by
      making localCheckpoint raise after N calls) — CC is a pure
      transform over checkpointed inputs, so a clean retry must converge
      to the identical labelling;
-  3. between write-audit-publish steps (mentions written, nodes written,
-     killed before edges) — re-publish overwrites idempotently;
+  3. between write-audit-publish steps (mentions and triples written,
+     nodes written, killed before edges) — re-publish overwrites
+     idempotently;
   4. mid-incremental-update (prior snapshot + new batch, killed after
      the cumulative triples snapshot, before nodes/edges).
 
@@ -30,17 +31,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from glinerswift_spark.operators.checkpoint import run_stage_with_checkpoint
-from glinerswift_spark.operators.graph import (
-    materialize_edges,
-    mentions_from_entities,
-    surface_to_canonical,
-)
-from glinerswift_spark.operators.linking import link_mentions
-from glinerswift_spark.plans.kg_pipeline import (
-    attach_embeddings,
-    extract_triples_fused,
-)
 from glinerswift_spark.operators.extract import extract_entities
+from glinerswift_spark.plans.kg_pipeline import build_kg
 from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
 from glinerswift_spark.sources.pages import write_table
 
@@ -67,35 +59,30 @@ def _publish(spark, docs, out, fail_before=None):
     """The run_kg.py stage sequence as library calls, with an optional
     kill switch before a named publish step."""
     spec = flagship_gazetteer()
-    triples = run_stage_with_checkpoint(
+    entities = run_stage_with_checkpoint(
         spark, docs,
-        lambda d: extract_triples_fused(d, FLAGSHIP_LABELS, spec, threshold=0.5),
-        out, "triples", "doc_id", num_buckets=8, lineage="chaos",
+        lambda d: extract_entities(
+            d, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
+        ),
+        out, "entities", "doc_id", num_buckets=8, lineage="chaos",
     ).drop("part_bucket")
     if fail_before == "linking":
-        raise RuntimeError("injected kill: after triples, before linking")
-    entities = extract_entities(
-        docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
-    )
-    mentions = attach_embeddings(mentions_from_entities(entities, "doc_id"), _emb(spark))
-    mention_map, nodes, _ = link_mentions(mentions)
-    surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
-    edges = materialize_edges(triples, surface_map, "doc_id")
-    write_table(mentions, os.path.join(out, "mentions"))
+        raise RuntimeError("injected kill: after entities, before linking")
+    kg = build_kg(docs, _emb(spark), FLAGSHIP_LABELS, spec, entities=entities)
+    write_table(kg["mentions"], os.path.join(out, "mentions"))
+    write_table(kg["triples"], os.path.join(out, "triples"))
     if fail_before == "nodes":
-        raise RuntimeError("injected kill: mentions published, nodes not")
-    write_table(nodes, os.path.join(out, "nodes"))
+        raise RuntimeError("injected kill: mentions and triples published, nodes not")
+    write_table(kg["nodes"], os.path.join(out, "nodes"))
     if fail_before == "edges":
         raise RuntimeError("injected kill: nodes published, edges not")
-    write_table(edges, os.path.join(out, "edges"))
+    write_table(kg["edges"], os.path.join(out, "edges"))
 
 
 def _final_tables(spark, out):
-    return (
-        _rows(spark.read.parquet(os.path.join(out, "nodes"))),
-        _rows(spark.read.parquet(os.path.join(out, "edges"))),
-        _rows(spark.read.parquet(os.path.join(out, "triples"))
-              .drop("part_bucket")),
+    return tuple(
+        _rows(spark.read.parquet(os.path.join(out, t)))
+        for t in ("nodes", "edges", "triples")
     )
 
 
@@ -110,14 +97,15 @@ def test_kill_between_triples_and_linking(spark, tmp_path, clean_run):
     out = str(tmp_path / "kg")
     with pytest.raises(RuntimeError, match="before linking"):
         _publish(spark, _docs(spark), out, fail_before="linking")
-    # triples stage committed its buckets; nothing else exists yet
-    assert os.path.isdir(os.path.join(out, "triples"))
+    # entities stage committed its buckets; nothing else exists yet
+    assert os.path.isdir(os.path.join(out, "entities"))
+    assert not os.path.isdir(os.path.join(out, "triples"))
     assert not os.path.isdir(os.path.join(out, "nodes"))
     done_before = _rows(
         spark.read.parquet(os.path.join(out, "_STATUS")).select("part_bucket")
     )
     _publish(spark, _docs(spark), out)  # resume
-    # resume did NOT re-run any triples bucket (status rows unchanged)
+    # resume did NOT re-run any entities bucket (status rows unchanged)
     assert _rows(
         spark.read.parquet(os.path.join(out, "_STATUS")).select("part_bucket")
     ) == done_before
@@ -137,7 +125,7 @@ def test_kill_between_cc_rounds(spark, tmp_path, clean_run, monkeypatch):
     """Mid-connected-components kill: localCheckpoint (called once per CC
     round to cut lineage) raises partway through linking. The retry must
     produce the identical canonicalization — CC is a pure transform of
-    the already-checkpointed triples + mentions."""
+    the already-checkpointed entities."""
     # patch the CONCRETE class: pyspark 4 instances are
     # pyspark.sql.classic.dataframe.DataFrame, whose localCheckpoint
     # overrides the pyspark.sql.DataFrame base — patching the base is a
@@ -170,40 +158,32 @@ def test_kill_mid_incremental_update(spark, tmp_path, clean_run):
     """Incremental run (prior snapshot + new batch) killed after the
     cumulative triples snapshot is written but before linking; the
     resumed incremental run must equal the full rebuild."""
-    from glinerswift_spark.plans.kg_pipeline import update_kg
-
     docs = _docs(spark)
     prior_docs = docs.where(F.col("doc_id") % 3 != 0)
     new_docs = docs.where(F.col("doc_id") % 3 == 0)
     prior_out = str(tmp_path / "prior")
     _publish(spark, prior_docs, prior_out)
-
+    prior = tuple(
+        spark.read.parquet(os.path.join(prior_out, t))
+        for t in ("mentions", "triples")
+    )
     spec = flagship_gazetteer()
-    prior_entities = extract_entities(
-        prior_docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
-    )
-    prior_mentions = attach_embeddings(
-        mentions_from_entities(prior_entities, "doc_id"), _emb(spark)
-    )
-    prior_triples = spark.read.parquet(os.path.join(prior_out, "triples")).drop(
-        "part_bucket"
-    )
 
     # attempt 1: cumulative snapshot written, then a kill before linking
     inc_out = str(tmp_path / "inc")
-    kg = update_kg(
-        prior_mentions, prior_triples, new_docs, _emb(spark),
-        FLAGSHIP_LABELS, spec, threshold=0.5,
+    kg = build_kg(
+        new_docs, _emb(spark), FLAGSHIP_LABELS, spec, threshold=0.5,
+        prior=prior,
     )
-    write_table(kg["triples"], os.path.join(inc_out, "triples_all"))
+    write_table(kg["triples"], os.path.join(inc_out, "triples"))
     # (kill here: nodes/edges never written)
 
     # attempt 2 (resume): rebuild the linking outputs from scratch
-    kg2 = update_kg(
-        prior_mentions, prior_triples, new_docs, _emb(spark),
-        FLAGSHIP_LABELS, spec, threshold=0.5,
+    kg2 = build_kg(
+        new_docs, _emb(spark), FLAGSHIP_LABELS, spec, threshold=0.5,
+        prior=prior,
     )
-    write_table(kg2["triples"], os.path.join(inc_out, "triples_all"))
+    write_table(kg2["triples"], os.path.join(inc_out, "triples"))
     write_table(kg2["nodes"], os.path.join(inc_out, "nodes"))
     write_table(kg2["edges"], os.path.join(inc_out, "edges"))
 

@@ -6,7 +6,6 @@ from glinerswift_spark.operators.classify import (
     classify_documents,
     extract_structure,
     stable_softmax,
-    top_prediction,
 )
 from glinerswift_spark.schema import ClassificationSpec, FieldSpec, RegexValidator
 from glinerswift_spark.scoring.backends import GazetteerSpec
@@ -39,7 +38,7 @@ def test_classification_single_label_top1(spark):
     spec = ClassificationSpec("sentiment", ["positive", "negative", "neutral"],
                               multi_label=False, cls_threshold=0.2)
     out = classify_documents(df, spec, _sentiment_spec())
-    top = {r.doc_id: r.top_label for r in top_prediction(out).collect()}
+    top = {r.doc_id: r.label for r in out.where(F.col("is_top")).collect()}
     assert top[1] == "positive" and top[2] == "negative"
     # doc 3 has no markers: softmax uniform -> argmax = first label index
     assert top[3] == "positive"
@@ -121,23 +120,6 @@ def test_structured_extraction_with_validators(spark):
     got = {r.field: r.value for r in out.collect()}
     assert got["email address"] == "john@apple.com"
     assert got["phone number"] == "555-1234"
-
-
-def test_dtype_str_vs_list(spark):
-    from glinerswift_spark.operators.classify import project_dtype
-
-    rows = [
-        (1, "l", "b", 0.9, 10, 11),
-        (1, "l", "a", 0.9, 0, 1),    # same score, earlier start -> first
-        (1, "l", "c", 0.5, 20, 21),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, label string, entity string, score double, start int, end int"
-    )
-    s = project_dtype(df, "str").collect()[0]
-    assert s.value == "a"
-    l = project_dtype(df, "list").collect()[0]
-    assert list(l["values"]) == ["a", "b", "c"]
 
 
 def test_run_schema_multitask_single_pass(spark):

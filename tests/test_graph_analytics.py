@@ -1,4 +1,4 @@
-"""pagerank_integer, repetition_stats, mixture_plan, write_training_shards."""
+"""pagerank_integer, repetition_stats, mixture_plan."""
 
 import math
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from glinerswift_spark.operators.graph import PAGERANK_SCALE, pagerank_integer
 from glinerswift_spark.operators.sampling import mixture_plan
 from glinerswift_spark.operators.textstats import repetition_stats
-from glinerswift_spark.sources.pages import write_training_shards
 
 
 def _edges(spark, rows):
@@ -98,44 +97,6 @@ def test_mixture_plan_caps_and_fractions(spark):
     assert plan["en"]["planned_tokens"] == 16 and plan["en"]["sample_frac"] == 0.5
     # de wants 16 but only has 8 -> capped, frac 1.0
     assert plan["de"]["planned_tokens"] == 8 and plan["de"]["sample_frac"] == 1.0
-
-
-def test_shard_writer_deterministic_and_partition_stable(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(200)], "doc_id long, text string"
-    )
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_training_shards(df, p1, n_shards=4)
-    # different input partitioning must not change shard contents or order
-    write_training_shards(df.repartition(13), p2, n_shards=4)
-    a = spark.read.parquet(p1)
-    b = spark.read.parquet(p2)
-    assert a.count() == 200
-    shards_a = sorted(
-        (r["__shard"], r["doc_id"])
-        for r in a.select("__shard", "doc_id").collect()
-    )
-    shards_b = sorted(
-        (r["__shard"], r["doc_id"])
-        for r in b.select("__shard", "doc_id").collect()
-    )
-    assert shards_a == shards_b
-    n_per = a.groupBy("__shard").count().collect()
-    assert len(n_per) == 4  # every shard populated
-    # within-file order is the md5 stream, not the key order: read one
-    # shard's file directly and compare to the expected hash ordering
-    import pandas as pd  # noqa: F401
-
-    one = (
-        a.where(F.col("__shard") == n_per[0]["__shard"])
-        .select("doc_id")
-        .toPandas()["doc_id"]
-        .tolist()
-    )
-    import hashlib
-
-    expect = sorted(one, key=lambda d: hashlib.md5(str(d).encode()).hexdigest())
-    assert one == expect
 
 
 def test_triangle_counts_known_graph(spark):

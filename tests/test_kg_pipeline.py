@@ -47,13 +47,11 @@ def test_build_kg_end_to_end(spark, sf_dir):
 
 
 def test_incremental_update_equals_full_rebuild(spark, sf_dir):
-    """update_kg over (prior batch, new batch) must reproduce the full
-    build's nodes AND edges exactly — extraction never re-runs on old
-    docs, yet the global re-link lands on identical canonical ids
+    """build_kg(prior=...) over (prior batch, new batch) must reproduce
+    the full build's nodes AND edges exactly — extraction never re-runs
+    on old docs, yet the global re-link lands on identical canonical ids
     (min-id determinism), the idempotent-resume property the north rule
     demands of incremental materialization."""
-    from glinerswift_spark.plans.kg_pipeline import update_kg
-
     docs = read_documents(spark, sf_dir).limit(120).cache()
     emb = read_embeddings(spark, sf_dir)
     old = docs.where(F.col("doc_id") % 3 != 0)
@@ -61,9 +59,9 @@ def test_incremental_update_equals_full_rebuild(spark, sf_dir):
 
     full = build_kg(docs, emb, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5)
     prior = build_kg(old, emb, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5)
-    upd = update_kg(
-        prior["mentions"], prior["triples"], new, emb,
-        FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5,
+    upd = build_kg(
+        new, emb, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5,
+        prior=(prior["mentions"], prior["triples"]),
     )
 
     def node_set(kg):
@@ -86,11 +84,13 @@ def test_incremental_update_equals_full_rebuild(spark, sf_dir):
 
 
 def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
-    """The KG tail as perfbench's kg_build and jobs/run_kg.py build it:
-    attach_embeddings returns a lineage cut, so the executed plans of
+    """attach_embeddings returns a lineage cut, so the executed plans of
     nodes and edges read materialized mentions and hold no extraction
     UDF (a lazy mentions relation puts MapInPandas 3x into nodes and 6x
-    into edges). executedPlan plans the query without running it."""
+    into edges). Two shapes: the tail as perfbench's kg_build builds it
+    (fused triples written to parquet), and build_kg over entities read
+    back from parquet, as jobs/run_kg.py calls it. executedPlan plans
+    the query without running it."""
     from glinerswift_spark.operators.extract import extract_entities
     from glinerswift_spark.operators.graph import (
         materialize_edges,
@@ -105,6 +105,7 @@ def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
     from glinerswift_spark.sources.pages import write_table
 
     docs = read_documents(spark, sf_dir).where(F.col("doc_id") < 40)
+    emb = read_embeddings(spark, sf_dir)
     spec = flagship_gazetteer()
     out = str(tmp_path / "triples")
     write_table(
@@ -113,12 +114,17 @@ def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
     entities = extract_entities(
         docs, FLAGSHIP_LABELS, spec, id_cols=["doc_id"], threshold=0.5
     )
-    mentions = attach_embeddings(
-        mentions_from_entities(entities), read_embeddings(spark, sf_dir)
-    )
+    mentions = attach_embeddings(mentions_from_entities(entities), emb)
     mention_map, nodes, _ = link_mentions(mentions)
     surface_map = surface_to_canonical(mentions.join(mention_map, "mention_id"))
     edges = materialize_edges(spark.read.parquet(out), surface_map)
-    for df in (nodes, edges):
+
+    ents_out = str(tmp_path / "entities")
+    write_table(entities, ents_out)
+    kg = build_kg(
+        docs, emb, FLAGSHIP_LABELS, spec,
+        entities=spark.read.parquet(ents_out),
+    )
+    for df in (nodes, edges, kg["triples"], kg["nodes"], kg["edges"]):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 0

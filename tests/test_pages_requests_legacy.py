@@ -27,7 +27,6 @@ from glinerswift_spark.sources.pages import (
     documents_as_pages,
     extract_pages_text,
     read_documents,
-    read_fixture_jsonl,
     repartition_salted,
 )
 
@@ -64,7 +63,7 @@ def test_extraction_over_pages_keyed_by_url(spark, sf_dir):
 # ---- per-request labels (reference JSONL fixture shape) ------------------
 
 def test_per_request_labels_jsonl(spark):
-    req = read_fixture_jsonl(spark, FIXTURE_JSONL)
+    req = spark.read.json(FIXTURE_JSONL)
     # gazetteer covering the three quick fixtures (surfaces from the texts)
     lex = {
         ("john smith", "person"): 0.9,

@@ -30,11 +30,6 @@ ALLOWED = {
     "simhash16": "one-call form of the simhash bits the oracle replays",
     "write_table_iceberg": "Iceberg sink seam for the production catalog",
     "top_relations": "library example in the verify recipe",
-    "update_kg": "in-memory form of jobs/run_kg.py --prior",
-    "read_fixture_jsonl": "left for a later decision",
-    "top_prediction": "left for a later decision",
-    "project_dtype": "left for a later decision",
-    "write_training_shards": "left for a later decision",
 }
 
 
@@ -91,3 +86,25 @@ def test_allowlist_names_exist():
     defs, _ = _scan()
     known = {name for _, name in defs} | {f.relative_to(PKG).as_posix() for f, _ in defs}
     assert sorted(set(ALLOWED) - known) == []
+
+
+def test_kg_link_tail_is_written_once():
+    """link_mentions and materialize_edges are each called once outside
+    tests/ and perfbench/ (whose kg_build keeps its own copy of the
+    stage sequence): in plans/kg_pipeline.build_kg, so the KG link tail
+    cannot be copied again."""
+    tail = ("link_mentions", "materialize_edges")
+    sites = {name: [] for name in tail}
+    for f in _sources():
+        if f.is_relative_to(ROOT / "perfbench"):
+            continue
+        for st in ast.parse(f.read_text()).body:
+            for n in ast.walk(st):
+                if isinstance(n, ast.Call):
+                    called = getattr(n.func, "id", getattr(n.func, "attr", None))
+                    if called in tail:
+                        sites[called].append(
+                            f"{f.relative_to(ROOT).as_posix()}:{getattr(st, 'name', None)}"
+                        )
+    build_kg = ["glinerswift_spark/plans/kg_pipeline.py:build_kg"]
+    assert sites == {name: build_kg for name in tail}

@@ -5,7 +5,7 @@ import pytest
 from glinerswift_spark.config import RelationConfig
 from glinerswift_spark.operators.extract import extract_entities
 from glinerswift_spark.operators.relations import entities_to_triples
-from glinerswift_spark.plans.kg_pipeline import extract_triples_fused, extract_and_link
+from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
 from glinerswift_spark.scoring.backends import (
     FLAGSHIP_LABELS,
     flagship_gazetteer,
@@ -44,7 +44,7 @@ def test_fused_triples_equal_composable_triples(spark, docs):
     sample = docs.limit(50)
     rcfg = RelationConfig()
     fused = extract_triples_fused(sample, FLAGSHIP_LABELS, spec, relation_cfg=rcfg)
-    _, composed = extract_and_link(sample, FLAGSHIP_LABELS, spec, relation_cfg=rcfg)
+    composed = entities_to_triples(extract_entities(sample, FLAGSHIP_LABELS, spec), rcfg)
     key = lambda r: (r.doc_id, r.subj, r.pred, r.obj, round(r.score, 9))
     assert sorted(map(key, fused.collect())) == sorted(map(key, composed.collect()))
     assert fused.count() > 0
