@@ -6,27 +6,41 @@ a.end < b.end) whose gap ``b.start - a.end`` is in [0, window_chars] and
 whose (a.label, b.label) has a template emits
 (subj=a.entity, pred=template, obj=b.entity, score=min(a.score, b.score)).
 
-Spark-first: a declarative self-equi-join on the document key with range
-predicates — Catalyst plans a shuffle hash/sort-merge join on the doc key
-(high-cardinality, AQE handles stragglers); the template map is a literal
-MapType expression (whole-stage codegen, no UDF). For the zero-shuffle
-fused path used by the flagship benchmark, see plans/kg_pipeline.py.
+One engine emitter holds the rule: ``emit_triples_coded``, a windowed
+sweep over one document's entities sorted by (start, end), linear in
+entities x window. ``coded_triples_frame`` runs it over a batch of
+documents and is the only caller, shared by both triple paths:
+``entities_to_triples`` (entity rows -> one shuffle on the doc key ->
+per-document sweep) and plans/kg_pipeline.extract_triples_fused
+(extraction and the sweep in one task, zero shuffles).
+``triples_from_entity_list`` is the plain reading of the rule, kept as
+the spec the tests and perfbench check the engine against.
 """
 
 from __future__ import annotations
 
-from itertools import chain
+from typing import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from glinerswift_spark.config import RelationConfig
+from glinerswift_spark.scoring.core import Entity
 
 
-def template_map_expr(cfg: RelationConfig):
-    pairs = chain.from_iterable(
-        ((F.lit(f"{a} {b}"), F.lit(pred)) for (a, b), pred in cfg.templates.items())
+def triple_output_schema(df: DataFrame, doc_col: str) -> StructType:
+    (doc_field,) = [f for f in df.schema.fields if f.name == doc_col]
+    return StructType(
+        [
+            StructField("subj", StringType()),
+            StructField("pred", StringType()),
+            StructField("obj", StringType()),
+            doc_field,
+            StructField("score", DoubleType()),
+        ]
     )
-    return F.create_map(*pairs)
 
 
 def entities_to_triples(
@@ -34,37 +48,56 @@ def entities_to_triples(
     cfg: RelationConfig | None = None,
     doc_col: str = "doc_id",
 ) -> DataFrame:
-    """entities(doc..., label, entity, score, start, end) -> triples."""
+    """entities(doc..., label, entity, score, start, end) -> triples.
+
+    One shuffle of entity rows on the doc key puts each document's rows
+    in one partition, contiguous after the sort; the sweep then emits
+    each document's triples once all its rows are in hand. A document's
+    rows can span Arrow batches, so the rows of a batch's last document
+    wait for the next batch, or for the end of the partition. Rows with
+    a null doc key match no document and emit nothing."""
     cfg = cfg or RelationConfig()
-    a = entities.alias("a")
-    b = entities.alias("b")
-    ordered = (F.col("a.start") < F.col("b.start")) | (
-        (F.col("a.start") == F.col("b.start")) & (F.col("a.end") < F.col("b.end"))
-    )
-    gap = F.col("b.start") - F.col("a.end")
-    joined = a.join(
-        b,
-        on=[
-            F.col(f"a.{doc_col}") == F.col(f"b.{doc_col}"),
-            ordered,
-            gap >= F.lit(0),
-            gap <= F.lit(cfg.window_chars),
-        ],
-        how="inner",
-    )
-    pred = F.element_at(
-        template_map_expr(cfg),
-        F.concat_ws(" ", F.col("a.label"), F.col("b.label")),
-    )
+    cols = [doc_col, "label", "entity", "score", "start", "end"]
+    rows = entities.where(F.col(doc_col).isNotNull()).select(*cols)
+    out_schema = triple_output_schema(rows, doc_col)
+    out_cols = [f.name for f in out_schema.fields]
+
+    def sweep_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pred_codes = build_pred_codes(cfg)
+
+        def first_rows(docs):
+            return np.flatnonzero(np.r_[True, docs[1:] != docs[:-1]])
+
+        def emit(frames: list[pd.DataFrame]) -> pd.DataFrame:
+            pdf = pd.concat(frames, ignore_index=True)
+            docs = pdf[doc_col].to_numpy()
+            firsts = first_rows(docs)
+            ents = list(map(Entity, pdf["entity"].tolist(), pdf["label"].tolist(),
+                            pdf["score"].tolist(), pdf["start"].tolist(),
+                            pdf["end"].tolist()))
+            bounds = [*firsts.tolist(), len(ents)]
+            ents_per_doc = [ents[a:b] for a, b in zip(bounds, bounds[1:])]
+            return coded_triples_frame(
+                out_cols, docs[firsts], ents_per_doc, pred_codes, cfg.window_chars
+            )
+
+        pending: list[pd.DataFrame] = []  # the rows of one open document
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            docs = pdf[doc_col].to_numpy()
+            tail = int(first_rows(docs)[-1])  # the batch's last document
+            if tail > 0 or (pending and pending[0][doc_col].iat[0] != docs[0]):
+                yield emit([*pending, pdf.iloc[:tail]])
+                pending = []
+            pending.append(pdf.iloc[tail:])
+        if pending:
+            yield emit(pending)
+
     return (
-        joined.select(
-            F.col("a.entity").alias("subj"),
-            pred.alias("pred"),
-            F.col("b.entity").alias("obj"),
-            F.col(f"a.{doc_col}").alias(doc_col),
-            F.least(F.col("a.score"), F.col("b.score")).alias("score"),
-        )
-        .where(F.col("pred").isNotNull())
+        rows.repartition(F.col(doc_col))
+        .sortWithinPartitions(doc_col)
+        .mapInPandas(sweep_triples, schema=out_schema)
     )
 
 
@@ -84,6 +117,43 @@ def build_pred_codes(cfg: RelationConfig):
     return pred_cats, tmap
 
 
+def coded_triples_frame(
+    cols: list[str], doc_ids, ents_per_doc, pred_codes, window: int
+) -> pd.DataFrame:
+    """One triples frame (columns ``cols``: subj, pred, obj, doc, score)
+    from a batch of documents: ``doc_ids[i]``'s entities are
+    ``ents_per_doc[i]``, and ``pred_codes`` is build_pred_codes' output.
+
+    The (heavily repeated) string columns are dictionary-encoded AS
+    codes while emitting: surface/pred appends are small cached ints,
+    not strings, and Categorical.from_codes skips the factorization
+    pass. Arrow then ships int codes + a small per-batch dictionary — at
+    ~100 triples/doc this cuts both the python->JVM IPC volume and the
+    per-triple Python object churn (the measured scaling bottleneck:
+    allocator/kernel time, not compute)."""
+    pred_cats, tmap = pred_codes
+    surf_code: dict[str, int] = {}
+    subj_c: list[int] = []
+    pred_c: list[int] = []
+    obj_c: list[int] = []
+    scores: list[float] = []
+    counts = np.zeros(len(ents_per_doc), dtype=np.int64)
+    for i, ents in enumerate(ents_per_doc):
+        counts[i] = emit_triples_coded(
+            ents, tmap, window, surf_code, subj_c, pred_c, obj_c, scores
+        )
+    cats = list(surf_code)
+    return pd.DataFrame(
+        {
+            cols[0]: pd.Categorical.from_codes(subj_c, cats),
+            cols[1]: pd.Categorical.from_codes(pred_c, pred_cats),
+            cols[2]: pd.Categorical.from_codes(obj_c, cats),
+            cols[3]: np.repeat(doc_ids, counts),
+            cols[4]: scores,
+        }
+    )
+
+
 def emit_triples_coded(
     entities: list,
     tmap: dict,
@@ -94,13 +164,13 @@ def emit_triples_coded(
     obj_c: list,
     scores: list,
 ) -> int:
-    """Dictionary-coded twin of triples_from_entity_list for the fused
-    mapInPandas hot loop: appends (subj_code, pred_code, obj_code, score)
-    to the caller's batch-level accumulators, interning surface strings in
+    """The engine's relation emitter for one document, dictionary-coded:
+    appends (subj_code, pred_code, obj_code, score) to the caller's
+    batch-level accumulators, interning surface strings in
     ``surf_code``. All appends are small ints / existing floats — no
     per-triple tuples or strings (per-triple Python allocation is the
-    measured N->4N scaling bottleneck). Same pair semantics and emission
-    order as triples_from_entity_list (tests assert parity). Returns the
+    measured N->4N scaling bottleneck). Its triples and their order are
+    the spec's, triples_from_entity_list (tests assert it). Returns the
     number of triples emitted. ``entities`` are mutated (sorted in place
     by (start, end))."""
     entities.sort(key=lambda e: (e.start, e.end))
@@ -139,9 +209,9 @@ def emit_triples_coded(
 
 
 def triples_from_entity_list(entities: list, cfg: RelationConfig, doc_id) -> list[tuple]:
-    """Pure-python twin of entities_to_triples for the fused mapInPandas path.
-
-    Same semantics, same output tuple order: (subj, pred, obj, doc, score).
+    """The relation rule as a spec: the plain per-pair reading the
+    engine's emitter (emit_triples_coded, behind both triple paths) is
+    checked against. Output tuples: (subj, pred, obj, doc, score).
     ``entities`` are scoring.core.Entity, already NMS'd/merged.
     """
     out = []

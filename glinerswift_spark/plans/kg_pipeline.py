@@ -12,8 +12,9 @@ Two equivalent shapes:
 
 ``build_kg``
     the one place the KG stage sequence is written: extract (skipped when
-    the caller passes ``entities``) -> triples (self-join) -> fold of a
-    prior snapshot (when the caller passes ``prior``) -> linking ->
+    the caller passes ``entities``) -> triples (one shuffle of entity
+    rows on the doc key, then the fused path's per-document sweep) ->
+    fold of a prior snapshot (when the caller passes ``prior``) -> linking ->
     connected components -> nodes/edges. Each stage is a pure
     DataFrame -> DataFrame transform (foreachBatch-compatible), except
     one: ``attach_embeddings`` returns the mentions relation as a
@@ -30,35 +31,17 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from glinerswift_spark.config import Configuration, DEFAULT_CONFIG, RelationConfig
 from glinerswift_spark.operators.extract import extract_entities
 from glinerswift_spark.operators.relations import (
     build_pred_codes,
-    emit_triples_coded,
+    coded_triples_frame,
     entities_to_triples,
+    triple_output_schema,
 )
 from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.pipeline import extract_document, extract_documents_batch
-
-
-def triple_output_schema(df: DataFrame, doc_col: str) -> StructType:
-    (doc_field,) = [f for f in df.schema.fields if f.name == doc_col]
-    return StructType(
-        [
-            StructField("subj", StringType()),
-            StructField("pred", StringType()),
-            StructField("obj", StringType()),
-            doc_field,
-            StructField("score", DoubleType()),
-        ]
-    )
+from glinerswift_spark.scoring.pipeline import extract_documents_batch
 
 
 def extract_triples_fused(
@@ -78,49 +61,19 @@ def extract_triples_fused(
     cols = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         backend = get_backend(backend_spec)
-        pred_cats, tmap = build_pred_codes(rcfg)
-        window = rcfg.window_chars
-
+        pred_codes = build_pred_codes(rcfg)
         for pdf in batches:
-            docs_np = pdf[doc_col].to_numpy()
-            texts = pdf[text_col]
-            # dictionary-encode the (heavily repeated) string columns AS
-            # codes while emitting: surface/pred appends are small cached
-            # ints, not strings, and Categorical.from_codes skips the
-            # factorization pass. Arrow then ships int codes + a small
-            # per-batch dictionary — at ~100 triples/doc this cuts both
-            # the python->JVM IPC volume and the per-triple Python object
-            # churn (the measured scaling bottleneck: allocator/kernel
-            # time, not compute).
-            surf_code: dict[str, int] = {}
-            subj_c: list[int] = []
-            pred_c: list[int] = []
-            obj_c: list[int] = []
-            scores: list[float] = []
-            counts = np.zeros(len(pdf), dtype=np.int64)
             # cross-document batched scoring when the backend supports it
             # (neural path: one BiLSTM/FFN batch pass per 64 docs);
             # falls back to per-doc extract_document otherwise
             ents_per_doc = extract_documents_batch(
-                texts.tolist(), labels, backend, threshold=threshold,
+                pdf[text_col].tolist(), labels, backend, threshold=threshold,
                 config=config,
             )
-            for i, ents in enumerate(ents_per_doc):
-                counts[i] = emit_triples_coded(
-                    ents, tmap, window, surf_code, subj_c, pred_c, obj_c, scores
-                )
-            cats = list(surf_code)
-            yield pd.DataFrame(
-                {
-                    cols[0]: pd.Categorical.from_codes(subj_c, cats),
-                    cols[1]: pd.Categorical.from_codes(pred_c, pred_cats),
-                    cols[2]: pd.Categorical.from_codes(obj_c, cats),
-                    cols[3]: np.repeat(docs_np, counts),
-                    cols[4]: scores,
-                }
+            yield coded_triples_frame(
+                cols, pdf[doc_col].to_numpy(), ents_per_doc, pred_codes,
+                rcfg.window_chars,
             )
 
     from glinerswift_spark.sources.pages import widen_small_scan
@@ -184,7 +137,9 @@ def build_kg(
     prior: tuple[DataFrame, DataFrame] | None = None,
 ) -> dict:
     """Full north-rule pipeline: documents -> entities -> triples ->
-    linking -> connected components -> nodes/edges. Returns every
+    linking -> connected components -> nodes/edges. Triples come from
+    operators/relations.entities_to_triples, which runs the same
+    per-document emitter as extract_triples_fused. Returns every
     intermediate as a DataFrame. The call runs one eager Spark job, the
     mentions lineage cut attach_embeddings makes (extraction + embedding
     join), then the connected-components rounds inside link_mentions;

@@ -99,10 +99,14 @@ def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read the pages table (Iceberg in production, parquet stand-in in dev)."""
-    if fmt == "iceberg":
-        return spark.read.format("iceberg").load(path)
-    return spark.read.format(fmt).load(path)
+    """Read the pages table (Iceberg in production, parquet stand-in in dev).
+
+    A table with ``html`` and no ``text`` column (the raw crawl shape)
+    gets ``text`` derived by extract_pages_text."""
+    pages = spark.read.format(fmt).load(path)
+    if "html" in pages.columns and "text" not in pages.columns:
+        return extract_pages_text(pages)
+    return pages
 
 
 def extract_pages_text(pages: DataFrame) -> DataFrame:

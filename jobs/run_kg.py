@@ -6,6 +6,9 @@
         [--threshold 0.5] [--buckets 64] [--salt-partitions N] \
         [--prior /path/to/previous/kg] [--analytics]
 
+A pages input, pages(url, warc_ts, html, lang) with no text column, gets
+text from html (sources/pages.read_pages); run it with --doc-col url.
+
 Stages:
   1. entities — the job's one extraction pass, a write-audit-publish
      checkpointed step: re-running resumes from the last completed

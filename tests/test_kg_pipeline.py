@@ -1,5 +1,7 @@
 """End-to-end KG plan on real testdata (flagship pipeline)."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from glinerswift_spark.plans.kg_pipeline import build_kg, top_relations
@@ -87,7 +89,8 @@ def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
     """attach_embeddings returns a lineage cut, so the executed plans of
     nodes and edges read materialized mentions and hold no extraction
     UDF (a lazy mentions relation puts MapInPandas 3x into nodes and 6x
-    into edges). Two shapes: the tail as perfbench's kg_build builds it
+    into edges); the triples sweep is the only MapInPandas they may hold.
+    Two shapes: the tail as perfbench's kg_build builds it
     (fused triples written to parquet), and build_kg over entities read
     back from parquet, as jobs/run_kg.py calls it. executedPlan plans
     the query without running it."""
@@ -125,6 +128,16 @@ def test_kg_tail_plans_do_not_replay_extraction(spark, sf_dir, tmp_path):
         docs, emb, FLAGSHIP_LABELS, spec,
         entities=spark.read.parquet(ents_out),
     )
-    for df in (nodes, edges, kg["triples"], kg["nodes"], kg["edges"]):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 0
+    plans = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in [("nodes", nodes), ("edges", edges)]
+        + [(f"kg.{t}", kg[t]) for t in ("triples", "nodes", "edges")]
+    }
+    for plan in plans.values():
+        # the only UDF left is the triple sweep, which reads entity rows
+        udfs = re.findall(r"MapInPandas (\w+)\(([^)]*)\)", plan)
+        assert len(udfs) == plan.count("MapInPandas")
+        assert all(n == "sweep_triples" and "text#" not in a for n, a in udfs)
+    # build_kg's triples are one shuffle + per-document sweep, no self-join
+    assert "Join" not in plans["kg.triples"]
+    assert "CartesianProduct" not in plans["kg.triples"]

@@ -27,6 +27,7 @@ from glinerswift_spark.sources.pages import (
     documents_as_pages,
     extract_pages_text,
     read_documents,
+    read_pages,
     repartition_salted,
 )
 
@@ -58,6 +59,25 @@ def test_extraction_over_pages_keyed_by_url(spark, sf_dir):
     )
     rows = ents.collect()
     assert len(rows) > 0 and all(r.url.startswith("https://") for r in rows)
+
+
+def test_read_pages_derives_text_from_html_only_pages(spark, sf_dir, tmp_path):
+    """The raw crawl shape, pages(url, warc_ts, html, lang) with no text
+    column, reads back with the text extract_pages_text derives, so the
+    job's extraction runs on it."""
+    docs = read_documents(spark, sf_dir).limit(90)
+    path = str(tmp_path / "pages")
+    documents_as_pages(docs).drop("text").write.parquet(path)
+    pages = read_pages(spark, path)
+    assert "text" in pages.columns
+    # from the written table: the 90-row limit is not replayed
+    want = {r.url: r.text for r in extract_pages_text(spark.read.parquet(path)).collect()}
+    assert {r.url: r.text for r in pages.collect()} == want and len(want) == 90
+    ents = extract_entities(
+        pages, FLAGSHIP_LABELS, flagship_gazetteer(),
+        id_cols=["url"], threshold=0.5,
+    )
+    assert ents.count() > 0
 
 
 # ---- per-request labels (reference JSONL fixture shape) ------------------

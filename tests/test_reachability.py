@@ -88,13 +88,11 @@ def test_allowlist_names_exist():
     assert sorted(set(ALLOWED) - known) == []
 
 
-def test_kg_link_tail_is_written_once():
-    """link_mentions and materialize_edges are each called once outside
+def _call_sites(names: tuple[str, ...]) -> dict[str, list[str]]:
+    """'file:top-level def' of every call to each of ``names`` outside
     tests/ and perfbench/ (whose kg_build keeps its own copy of the
-    stage sequence): in plans/kg_pipeline.build_kg, so the KG link tail
-    cannot be copied again."""
-    tail = ("link_mentions", "materialize_edges")
-    sites = {name: [] for name in tail}
+    stage sequence)."""
+    sites = {name: [] for name in names}
     for f in _sources():
         if f.is_relative_to(ROOT / "perfbench"):
             continue
@@ -102,9 +100,33 @@ def test_kg_link_tail_is_written_once():
             for n in ast.walk(st):
                 if isinstance(n, ast.Call):
                     called = getattr(n.func, "id", getattr(n.func, "attr", None))
-                    if called in tail:
+                    if called in names:
                         sites[called].append(
                             f"{f.relative_to(ROOT).as_posix()}:{getattr(st, 'name', None)}"
                         )
+    return {name: sorted(s) for name, s in sites.items()}
+
+
+def test_kg_link_tail_is_written_once():
+    """link_mentions and materialize_edges are each called once, in
+    plans/kg_pipeline.build_kg, so the KG link tail cannot be copied
+    again."""
+    tail = ("link_mentions", "materialize_edges")
     build_kg = ["glinerswift_spark/plans/kg_pipeline.py:build_kg"]
-    assert sites == {name: build_kg for name in tail}
+    assert _call_sites(tail) == {name: build_kg for name in tail}
+
+
+def test_relation_rule_has_one_engine_emitter():
+    """emit_triples_coded is called only by the batch helper
+    coded_triples_frame, and both triple paths call that helper, so the
+    relation rule has one engine copy (triples_from_entity_list is the
+    spec the tests check it against)."""
+    assert _call_sites(("emit_triples_coded", "coded_triples_frame")) == {
+        "emit_triples_coded": [
+            "glinerswift_spark/operators/relations.py:coded_triples_frame"
+        ],
+        "coded_triples_frame": [
+            "glinerswift_spark/operators/relations.py:entities_to_triples",
+            "glinerswift_spark/plans/kg_pipeline.py:extract_triples_fused",
+        ],
+    }

@@ -4,7 +4,10 @@ import pytest
 
 from glinerswift_spark.config import RelationConfig
 from glinerswift_spark.operators.extract import extract_entities
-from glinerswift_spark.operators.relations import entities_to_triples
+from glinerswift_spark.operators.relations import (
+    entities_to_triples,
+    triples_from_entity_list,
+)
 from glinerswift_spark.plans.kg_pipeline import extract_triples_fused
 from glinerswift_spark.scoring.backends import (
     FLAGSHIP_LABELS,
@@ -58,10 +61,69 @@ def test_relation_templating_semantics(spark):
         (1, "b", "o2", 0.8, 30, 32),  # gap 25 -> too far
         (1, "b", "o3", 0.8, 3, 4),    # overlaps -> no triple
         (2, "b", "x", 0.5, 0, 1),     # wrong order (b then nothing)
+        (3, "a", "s3", 0.7, 0, 5),
+        (3, "b", "o3", 0.9, 15, 17),  # gap == window_chars -> triple
+        (4, "a", "s4", 0.6, 0, 5),
+        (4, "b", "o4", 0.95, 5, 8),   # gap 0 -> triple
+        (5, "a", "s5", 0.9, 5, 5),
+        (5, "b", "o5", 0.5, 5, 9),    # equal start, shorter first -> triple
+        (6, "a", "s6", 0.9, 4, 4),
+        (6, "b", "o6", 0.9, 4, 4),    # identical (start, end) -> no triple
+        (7, "b", "o7", 0.9, 0, 5),
+        (7, "a", "s7", 0.9, 7, 9),    # (b, a) has no template -> no triple
     ]
     df = spark.createDataFrame(rows, "doc_id int, label string, entity string, score double, start int, end int")
     got = [(r.subj, r.pred, r.obj, r.doc_id, r.score) for r in entities_to_triples(df, rcfg).collect()]
-    assert got == [("s1", "rel", "o1", 1, 0.8)]
+    assert sorted(got) == [
+        ("s1", "rel", "o1", 1, 0.8),
+        ("s3", "rel", "o3", 3, 0.7),
+        ("s4", "rel", "o4", 4, 0.6),
+        ("s5", "rel", "o5", 5, 0.5),
+    ]
+
+
+def test_relation_sweep_documents_spanning_arrow_batches(spark):
+    """With 3 rows per Arrow batch, a dense document's rows and most
+    small documents' rows arrive split across batches; the per-document
+    sweep must still see every document whole. Int and string doc keys."""
+    import random
+
+    from glinerswift_spark.scoring.core import Entity
+
+    rng = random.Random(11)
+    rcfg = RelationConfig(
+        window_chars=30,
+        templates={("p", "o"): "r1", ("o", "p"): "r2", ("p", "p"): "r3"},
+    )
+    docs = {0: [Entity(f"e{i}", "po"[i % 2], 0.5 + i / 100, 12 * i, 12 * i + 5) for i in range(40)]}
+    for d in range(1, 12):
+        docs[d] = [
+            Entity(f"d{d}w{i}", rng.choice("po"), rng.random(), s, s + rng.randint(0, 6))
+            for i, s in enumerate(sorted(rng.sample(range(60), rng.randint(1, 6))))
+        ]
+    key = {"doc_id": lambda d: d, "url": lambda d: f"https://example.org/doc/{d}"}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "3")
+        for col, typ in (("doc_id", "long"), ("url", "string")):
+            rows = [(key[col](d), e.label, e.text, e.score, e.start, e.end)
+                    for d, ents in docs.items() for e in ents]
+            df = spark.createDataFrame(
+                rows, f"{col} {typ}, label string, entity string, score double, start int, end int"
+            )
+            got = {}
+            for r in entities_to_triples(df, rcfg, doc_col=col).collect():
+                got.setdefault(r[col], []).append((r.subj, r.pred, r.obj, r[col], r.score))
+            want = {}
+            for d, ents in docs.items():
+                ts = triples_from_entity_list(ents, rcfg, key[col](d))
+                if ts:
+                    want[key[col](d)] = sorted(ts)
+            assert {k: sorted(v) for k, v in got.items()} == want
+            assert len(want[key[col](0)]) > 40
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_gazetteer_scores_sql_recomputable():
