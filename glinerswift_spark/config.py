@@ -84,7 +84,6 @@ class LinkingConfig:
     """
 
     shingle_size: int = 3
-    num_hashes: int = 16
-    num_bands: int = 4        # rows per band = num_hashes // num_bands
+    num_bands: int = 4
     cosine_threshold: float = 0.85
     max_cc_iterations: int = 20

@@ -47,11 +47,6 @@ def _last_ws(s: str) -> int:
     return -1
 
 
-def should_chunk(text: str, max_words: int) -> bool:
-    # ref TextChunker.swift:31-33
-    return count_words(text) > max_words
-
-
 def chunk_text(
     text: str,
     max_chars: int = 4096,

@@ -53,7 +53,11 @@ def minhash_band_sig_from_hashes(hashes: Column, band: int) -> Column:
 
 def band_signatures(hashes: Column, num_bands: int) -> Column:
     """One (band, sig) struct per band 1..num_bands, exploded into rows —
-    the LSH bucket keys shared by document dedup and mention linking."""
+    the LSH bucket keys shared by document dedup and mention linking.
+    A 32-char md5 holds four 8-char band slices; a fifth band would be
+    the empty string for every row (one bucket holding everything)."""
+    if not 1 <= num_bands <= 4:
+        raise ValueError(f"num_bands must be in 1..4, got {num_bands}")
     return F.explode(
         F.array(
             *[

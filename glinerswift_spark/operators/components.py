@@ -9,7 +9,7 @@ The label-of-label join halves the remaining distance to each
 component's minimum every round (path doubling), so convergence is
 O(log diameter) instead of O(diameter) — a 10^6-hop duplicate chain
 resolves in ~20 rounds. Near-dup clusters are usually tiny (diameter
-2-3), so the doubling join is DEFERRED (``jump_after``, default 2):
+2-3), so the doubling join is DEFERRED (``JUMP_AFTER`` rounds):
 shallow graphs converge on seed + plain hash-min rounds without paying
 the extra self-join or its codegen, and the doubling term still makes
 the default max_iterations=20 budget safe for adversarial chain-shaped
@@ -28,6 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# plain hash-min rounds before pointer jumping starts; chain-shaped
+# graphs then converge in JUMP_AFTER + O(log diameter) rounds
+JUMP_AFTER = 2
+
 
 def connected_components(
     edges: DataFrame,
@@ -35,7 +39,6 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 20,
     on_exhaustion: str = "raise",
-    jump_after: int = 2,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
@@ -44,15 +47,7 @@ def connected_components(
     can do this at web scale), the labels are WRONG, not approximate:
     ``on_exhaustion='raise'`` (default) fails loudly; ``'warn'`` logs and
     returns the partial labels for callers that tolerate over-split
-    components.
-
-    ``jump_after``: pointer jumping (the label-of-label self-join) is
-    DEFERRED until this many plain hash-min rounds have run. Near-dup
-    graphs overwhelmingly have diameter 2-3 — seed + 2 plain rounds
-    finish them without ever paying the extra join + its codegen — while
-    chain-shaped adversaries still converge in
-    ``jump_after + O(log diameter)`` rounds once doubling kicks in.
-    Set 0 to jump from the first round."""
+    components."""
     # checkpoint FIRST: the (possibly expensive) edge computation upstream
     # materializes exactly once — symmetrizing via union would otherwise
     # evaluate the whole upstream plan twice (once per direction)
@@ -85,12 +80,12 @@ def connected_components(
             F.coalesce(F.col("nbr_min"), F.col("component")),
         ]
         joined = labels.join(neighbor_min, "node", "left")
-        if rnd >= jump_after:
+        if rnd >= JUMP_AFTER:
             # pointer jumping: my component's CURRENT component (the
             # labels relation joined to itself on component = node). The
             # component id is always an existing node id, so the join is
             # total; deferred past the shallow-graph rounds (see
-            # ``jump_after``).
+            # ``JUMP_AFTER``).
             grand = labels.select(
                 F.col("node").alias("__c"), F.col("component").alias("grand_min")
             )

@@ -2,16 +2,17 @@
 
 The reference prints a per-request stage split —
 "Tokenize: Xms | Encode: Xms | Score: Xms | Decode: Xms"
-(ref GLiNERModel.swift:388-392). The Spark analogue: an instrumented
-mapInPandas pass that emits one row per (partition, stage) with the
-accumulated seconds and doc count; aggregating those rows gives the
-cluster-wide stage split. Used by bench.py; cheap enough to run on a
-sample in production (it re-runs extraction, so it is a PROFILING op,
-not a hook on the hot path)."""
+(ref GLiNERModel.swift:388-392). The Spark analogue: a mapInPandas pass
+that runs the shipped ``extract_documents_batch`` with its stage entry
+points wrapped in timers, and emits one row per (partition, stage) with
+the accumulated seconds and doc count; aggregating those rows gives the
+cluster-wide stage split. Used by bench.py; it is a PROFILING op (a
+second extraction pass over its input), not a hook on the hot path."""
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
@@ -25,14 +26,8 @@ from pyspark.sql.types import (
 )
 
 from glinerswift_spark.config import Configuration, DEFAULT_CONFIG
-from glinerswift_spark.functions.chunker import chunk_text, should_chunk
-from glinerswift_spark.functions.text import word_spans
+from glinerswift_spark.scoring import pipeline
 from glinerswift_spark.scoring.backends import get_backend
-from glinerswift_spark.scoring.core import (
-    decode_spans,
-    merge_chunk_entities,
-    shift_entities,
-)
 
 STAGES = ("split", "chunk", "score", "decode", "merge")
 
@@ -45,49 +40,47 @@ TIMING_SCHEMA = StructType(
     ]
 )
 
+# pipeline module attribute -> stage; the backend's scoring methods
+# (whichever of them it has) time as "score"
+_PIPELINE_STAGES = {
+    "word_spans": "split",
+    "chunk_text": "chunk",
+    "decode_document_logits": "decode",
+    "decode_candidates": "decode",
+    "merge_chunk_entities": "merge",
+}
+_SCORE_METHODS = ("score_document", "score_documents", "score_document_sparse")
 
-def _extract_timed(text, labels, backend, threshold, config, t):
-    t0 = time.perf_counter()
-    chunked = should_chunk(text, config.chunk_max_words)
-    chunks = (
-        chunk_text(
-            text,
-            config.chunk_max_characters,
-            config.chunk_overlap_characters,
-            config.chunk_max_words,
-        )
-        if chunked
-        else None
-    )
-    t1 = time.perf_counter()
-    t["chunk"] += t1 - t0
-    pieces = (
-        [(c.text, c.start) for c in chunks]
-        if chunks and len(chunks) > 1
-        else [(text, 0)]
-    )
-    per_chunk = []
-    for piece, off in pieces:
+
+def _timed(fn, t: dict, stage: str):
+    def wrapper(*args, **kwargs):
         t0 = time.perf_counter()
-        spans = word_spans(piece)
-        t1 = time.perf_counter()
-        t["split"] += t1 - t0
-        if not spans:
-            per_chunk.append([])
-            continue
-        logits = backend.score_document(piece, spans, labels)
-        t2 = time.perf_counter()
-        t["score"] += t2 - t1
-        ents = decode_spans(logits, labels, threshold, piece, spans)
-        t3 = time.perf_counter()
-        t["decode"] += t3 - t2
-        per_chunk.append(shift_entities(ents, off))
-    t0 = time.perf_counter()
-    merged = (
-        merge_chunk_entities(per_chunk) if len(per_chunk) > 1 else per_chunk[0]
-    )
-    t["merge"] += time.perf_counter() - t0
-    return merged
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            t[stage] += time.perf_counter() - t0
+
+    return wrapper
+
+
+@contextmanager
+def _stage_timers(backend, t: dict):
+    """Add the wall time of each stage entry point the pipeline calls
+    into ``t[stage]`` while the block runs. None of the wrapped calls
+    nests inside another, so the sums do not double count."""
+    originals = {a: getattr(pipeline, a) for a in _PIPELINE_STAGES}
+    methods = [m for m in _SCORE_METHODS if hasattr(backend, m)]
+    try:
+        for a, stage in _PIPELINE_STAGES.items():
+            setattr(pipeline, a, _timed(originals[a], t, stage))
+        for m in methods:  # instance attributes shadow the class methods
+            setattr(backend, m, _timed(getattr(backend, m), t, "score"))
+        yield
+    finally:
+        for a, fn in originals.items():
+            setattr(pipeline, a, fn)
+        for m in methods:
+            vars(backend).pop(m, None)
 
 
 def stage_timing_report(
@@ -100,19 +93,23 @@ def stage_timing_report(
 ) -> DataFrame:
     """-> (stage, seconds, docs, entities): cluster-wide stage split."""
     labels = list(labels)
-    thr = config.threshold if threshold is None else threshold
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = get_backend(backend_spec)
         t = {s: 0.0 for s in STAGES}
         docs = 0
         ents = 0
-        for pdf in batches:
-            for text in pdf[text_col]:
-                if not text:
-                    continue
-                ents += len(_extract_timed(text, labels, backend, thr, config, t))
-                docs += 1
+        with _stage_timers(backend, t):
+            for pdf in batches:
+                texts = pdf[text_col].tolist()
+                docs += sum(1 for x in texts if x)
+                ents += sum(
+                    len(e)
+                    for e in pipeline.extract_documents_batch(
+                        texts, labels, backend, threshold=threshold,
+                        config=config,
+                    )
+                )
         yield pd.DataFrame(
             {
                 "stage": list(STAGES),

@@ -735,21 +735,33 @@ class PromptEncodingBackend:
         """Batched scoring: encoding + projection stay per-document
         (python-side, memoized tokenization), but the span-rep head runs
         ONE BiLSTM/FFN batch pass across all documents — the same batch
-        seam a real batched transformer encoder plugs into."""
+        seam a real batched transformer encoder plugs into.
+
+        Overflow is reported per document: a document whose encoding
+        exceeds ``spec.max_seq_len`` stays out of the forward pass and
+        gets ``None`` in its output slot (the caller re-chunks it), while
+        every other slot holds its logits as usual. ``score_document``
+        raises ``EncodingOverflowError`` instead."""
         from glinerswift_spark.config import DEFAULT_CONFIG
         from glinerswift_spark.functions.schema_encoding import (
+            EncodingOverflowError,
             entity_label_embeddings,
         )
 
         max_w = DEFAULT_CONFIG.max_span_width
         n_lb = len(labels)
+        fits = []  # indices of the documents that fit the window
         encodings = []
-        for text, spans in zip(texts, spans_list):
-            if not spans or n_lb == 0:
-                encodings.append(None)
-                continue
-            words = [text[s:e] for s, e in spans]
-            encodings.append(self.encode(words, labels))
+        for i, (text, spans) in enumerate(zip(texts, spans_list)):
+            encoding = None
+            if spans and n_lb:
+                words = [text[s:e] for s, e in spans]
+                try:
+                    encoding = self.encode(words, labels)
+                except EncodingOverflowError:
+                    continue
+            fits.append(i)
+            encodings.append(encoding)
 
         # Cross-document encoder batching: a provider exposing
         # forward_batch gets ALL the batch's encodings in one call, so a
@@ -788,16 +800,16 @@ class PromptEncodingBackend:
                 self.heads.prompt_proj(entity_label_embeddings(prompts, n_lb))
             )
         reps = self.heads.span_head.batch(word_mats, max_w)
-        out = []
-        for spans, span_rep, lab in zip(spans_list, reps, label_projs):
-            n = len(spans)
+        out: list = [None] * len(texts)
+        for i, span_rep, lab in zip(fits, reps, label_projs):
+            n = len(spans_list[i])
             if n == 0 or lab is None:
-                out.append(np.full((n, max_w, n_lb), NEG_INF))
+                out[i] = np.full((n, max_w, n_lb), NEG_INF)
                 continue
             logits = span_rep @ lab.T * self.spec.scale + self.spec.bias
             for w in range(1, max_w):
                 logits[max(n - w, 0):, w, :] = NEG_INF
-            out.append(logits)
+            out[i] = logits
         return out
 
     def classify_logits(self, text: str, spans: list, labels: list) -> np.ndarray:

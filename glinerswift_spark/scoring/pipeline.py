@@ -3,7 +3,7 @@
 Mirrors the reference's per-document lifecycle
 (ref GLiNERModel.swift:120-156, 462-491):
 
-  text --(should_chunk?)--> [chunks] --(score+decode per chunk)-->
+  text --(over the word budget?)--> [chunks] --(score+decode per chunk)-->
   shift offsets by chunk start --> cross-chunk merge --> [Entity]
 
 Short documents skip chunk handling entirely (single-chunk passthrough,
@@ -154,8 +154,9 @@ def extract_document(
                 [shift_entities(run_safe(c.text), c.start) for c in sub]
             )
 
-    # one regex pass decides chunking AND feeds the short-doc fast path
-    # (should_chunk == word count > max, same WORD_RE as word_spans)
+    # one regex pass decides chunking AND feeds the short-doc fast path:
+    # a document chunks only when its word count is strictly over the
+    # budget (ref TextChunker.swift:31-33)
     spans_full = word_spans(text)
     if len(spans_full) <= config.chunk_max_words:
         return run_safe(text, spans_full)
@@ -185,9 +186,13 @@ def extract_documents_batch(
     (unchunked) documents score in cross-document batches through the
     backend's ``score_documents`` (one BiLSTM/FFN batch pass instead of
     per-doc calls — the per-call GEMM overhead on tiny matrices is the
-    neural path's single-core cost); long documents fall back to the
-    per-document chunked path. Output is parallel to ``texts``. Backends
-    without ``score_documents`` just loop extract_document."""
+    neural path's single-core cost); long documents take the
+    per-document chunked path. A batch slot that ``score_documents``
+    returns as ``None`` (the document overflowed the encoder window)
+    also goes through extract_document, whose ``run_safe`` re-chunks it;
+    its batch-mates are decoded from the same batch pass. Output is
+    parallel to ``texts``. Backends without ``score_documents`` just
+    loop extract_document."""
     thr = config.threshold if threshold is None else threshold
     score_batch = getattr(backend, "score_documents", None)
     if score_batch is None or not labels:
@@ -200,41 +205,21 @@ def extract_documents_batch(
     out: list = [None] * len(texts)
     pending: list = []  # (row index, text, spans)
 
-    def score_or_split(items):
-        # One subword-dense doc must not sink the whole batch — and
-        # (ADVICE r5) must not demote its batch-mates to the per-doc
-        # path either: bisect on overflow, so the offending doc(s)
-        # isolate to singletons in O(log B) batch attempts and go
-        # through run_safe's re-chunking, while every clean doc still
-        # scores through the batched path. Residual caveat: a clean
-        # doc's sub-batch composition (hence fp32 GEMM packing) can
-        # still differ from the no-overflow run, so scores carry the
-        # same ~1e-5 reassociation tolerance the batched path always
-        # has vs per-doc.
-        try:
-            logits_list = score_batch(
-                [p[1] for p in items], [p[2] for p in items], labels
-            )
-        except EncodingOverflowError:
-            if len(items) == 1:
-                i, text, _spans = items[0]
-                out[i] = extract_document(
-                    text, labels, backend, threshold, config, label_groups
-                )
-                return
-            mid = len(items) // 2
-            score_or_split(items[:mid])
-            score_or_split(items[mid:])
-            return
-        for (i, text, spans), logits in zip(items, logits_list):
-            out[i] = decode_document_logits(
-                logits, labels, thr, text, spans, groups
-            )
-
     def flush():
         if not pending:
             return
-        score_or_split(list(pending))
+        logits_list = score_batch(
+            [p[1] for p in pending], [p[2] for p in pending], labels
+        )
+        for (i, text, spans), logits in zip(pending, logits_list):
+            if logits is None:
+                out[i] = extract_document(
+                    text, labels, backend, threshold, config, label_groups
+                )
+            else:
+                out[i] = decode_document_logits(
+                    logits, labels, thr, text, spans, groups
+                )
         pending.clear()
 
     for i, text in enumerate(texts):

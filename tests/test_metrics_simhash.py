@@ -5,20 +5,46 @@ from pyspark.sql import functions as F
 from glinerswift_spark.operators.dedup import simhash16, simhash_pairs
 from glinerswift_spark.operators.metrics import STAGES, stage_timing_report
 from glinerswift_spark.functions.hashing import words_col
-from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
+from glinerswift_spark.scoring.backends import (
+    FLAGSHIP_LABELS,
+    PromptEncodingSpec,
+    flagship_gazetteer,
+)
 from glinerswift_spark.sources.pages import read_documents
 
 
 def test_stage_timing_report(spark, sf_dir):
-    docs = read_documents(spark, sf_dir).limit(50)
-    rep = stage_timing_report(docs, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5)
-    rows = {r.stage: r for r in rep.collect()}
-    assert set(rows) == set(STAGES)
-    assert all(r.seconds >= 0 for r in rows.values())
-    assert rows["score"].docs == 50
-    assert rows["score"].entities > 0
-    # scoring should dominate split/merge for this corpus
-    assert rows["score"].seconds > 0
+    from glinerswift_spark.operators.extract import extract_entities
+
+    # a 48-subword encoder window: the long doc overflows and takes the
+    # shipped path's re-chunk instead of failing the profiling pass
+    overflow_docs = spark.createDataFrame(
+        [
+            (1, "john smith"),
+            (2, " ".join(["apple", "inc.", "hires", "john"] * 15)),
+            (3, "works at apple"),
+            (4, ""),
+        ],
+        "doc_id long, text string",
+    )
+    cases = [
+        (read_documents(spark, sf_dir).limit(50), 50,
+         FLAGSHIP_LABELS, flagship_gazetteer(), 0.5),
+        (overflow_docs, 3,
+         ["person", "organization"], PromptEncodingSpec(max_seq_len=48), 0.05),
+    ]
+    for docs, n_docs, labels, spec, thr in cases:
+        rep = stage_timing_report(docs, labels, spec, threshold=thr)
+        rows = {r.stage: r for r in rep.collect()}
+        assert set(rows) == set(STAGES)
+        assert all(r.seconds >= 0 for r in rows.values())
+        assert rows["score"].docs == n_docs
+        assert rows["score"].entities > 0
+        # the profile runs the shipped extraction: same entity count
+        assert rows["score"].entities == extract_entities(
+            docs, labels, spec, threshold=thr
+        ).count()
+        assert rows["score"].seconds > 0
 
 
 def test_simhash_identical_and_different(spark):

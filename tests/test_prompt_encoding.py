@@ -375,18 +375,19 @@ def test_overflow_in_batch_matches_per_document_path():
     ]
     batch = extract_documents_batch(docs, LABELS, b, threshold=0.05)
     solo = [extract_document(t, LABELS, b, threshold=0.05) for t in docs]
-    # round-6: clean batch-mates of an overflowing doc keep BATCHED
-    # scoring (bisection fallback), so identity is exact but scores may
-    # differ from the per-doc twin by float reassociation
+    # clean batch-mates of an overflowing doc keep BATCHED scoring (the
+    # overflowing doc's slot comes back None and re-chunks alone), so
+    # identity is exact but scores may differ from the per-doc twin by
+    # float reassociation
     _assert_ents_close(batch, solo)
 
 
 def test_overflow_batch_falls_back_only_for_overflowing_docs():
-    # ADVICE r5 / round-6: an overflowing batch member is isolated by
-    # bisection; its CLEAN batch-mates keep scoring through the batched
-    # path (score_documents), never the per-document score_document
-    # fallback. Spy on score_document: after the batch run it must have
-    # seen only re-chunked pieces of the overflowing doc.
+    # score_documents reports the overflowing batch member as a None
+    # slot in the ONE batched call; its CLEAN batch-mates score through
+    # that call, never the per-document score_document fallback. Spy on
+    # both: one score_documents call, and score_document sees only
+    # re-chunked pieces of the overflowing doc.
     from glinerswift_spark.scoring.pipeline import extract_documents_batch
 
     b = _overflow_backend()
@@ -394,16 +395,24 @@ def test_overflow_batch_falls_back_only_for_overflowing_docs():
     clean_b = "works at apple"
     monster = " ".join(["apple", "inc.", "hires", "john"] * 15)
     seen = []
+    batch_calls = []
     orig = b.score_document
+    orig_batch = b.score_documents
 
     def spy(text, spans, labels):
         seen.append(text)
         return orig(text, spans, labels)
 
+    def spy_batch(texts, spans_list, labels):
+        batch_calls.append(list(texts))
+        return orig_batch(texts, spans_list, labels)
+
     b.score_document = spy
+    b.score_documents = spy_batch
     got = extract_documents_batch(
         [clean_a, monster, clean_b], LABELS, b, threshold=0.05
     )
+    assert batch_calls == [[clean_a, monster, clean_b]]
     assert seen, "the overflowing doc must route through the per-doc path"
     assert all(piece in monster for piece in seen), seen
     assert clean_a not in seen and clean_b not in seen

@@ -58,6 +58,10 @@ def test_minhash_pairs_find_near_dups(spark):
     )
     pairs = {(r.doc_a, r.doc_b) for r in minhash_candidate_pairs(df).collect()}
     assert (1, 2) in pairs and (1, 3) not in pairs
+    # one 32-char md5 holds 4 band slices; a 5th band would key every
+    # doc to the empty signature (one bucket, all pairs)
+    with pytest.raises(ValueError, match="num_bands"):
+        minhash_candidate_pairs(df, num_bands=5)
 
 
 def test_ngram_jaccard_exact_values(spark):

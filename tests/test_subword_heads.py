@@ -131,7 +131,9 @@ def test_bilstm_run_batch_matches_per_sequence():
     assert z[0].shape == (0, 16)
 
 
-def test_extract_documents_batch_matches_per_doc():
+def test_extract_documents_batch_matches_per_doc(monkeypatch):
+    from glinerswift_spark.config import Configuration
+    from glinerswift_spark.scoring import pipeline
     from glinerswift_spark.scoring.backends import NeuralStubSpec
     from glinerswift_spark.scoring.pipeline import (
         extract_document,
@@ -156,6 +158,25 @@ def test_extract_documents_batch_matches_per_doc():
         ]
         for e1, e2 in zip(p, q):
             assert abs(e1.score - e2.score) < 1e-9
+
+    # chunking starts strictly OVER the word budget (ref
+    # TextChunker.swift:31-33): ten words fit chunk_max_words=10 and
+    # batch unchunked; at chunk_max_words=9 they take the chunked path
+    chunk_calls = []
+    orig_chunk = pipeline.chunk_text
+
+    def spy_chunk(*args, **kwargs):
+        chunk_calls.append(args[0])
+        return orig_chunk(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "chunk_text", spy_chunk)
+    ten = " ".join(["w"] * 10)
+    for max_words, chunked in ((10, False), (9, True)):
+        chunk_calls.clear()
+        cfg = Configuration(max_word_count=max_words + 8)
+        assert cfg.chunk_max_words == max_words
+        extract_documents_batch([ten], labels, b, threshold=0.3, config=cfg)
+        assert chunk_calls == ([ten] if chunked else [])
 
 
 def test_tokenizer_from_tokenizer_json(tmp_path):

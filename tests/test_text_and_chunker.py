@@ -4,7 +4,7 @@ Semantics refs: WordSplitter.swift:14 (regex), SentencePieceUnigram.swift:68-73
 (NFKC + whitespace incl. U+3000/U+FEFF), TextChunker.swift:10-127.
 """
 
-from glinerswift_spark.functions.chunker import chunk_text, should_chunk
+from glinerswift_spark.functions.chunker import chunk_text
 from glinerswift_spark.functions.text import (
     count_words,
     extract_text_from_html,
@@ -41,12 +41,6 @@ def test_html_extraction_deterministic_golden():
     # byte-identical invariant: same bytes -> same text, twice
     assert extract_text_from_html(html) == extract_text_from_html(html)
     assert extract_text_from_html(b"") == ""
-
-
-def test_should_chunk_threshold():
-    text = " ".join(["w"] * 10)
-    assert not should_chunk(text, 10)  # strict >
-    assert should_chunk(text, 9)
 
 
 def test_chunk_short_text_single():
