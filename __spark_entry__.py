@@ -353,9 +353,9 @@ def _q_classify_gazetteer(spark, sf_dir):
     through the driver contract: multi-label sigmoid scoring with the
     gazetteer backend. Document label logit = max over span logits, so the
     probability is sigmoid(logit(max term score)) == that score (to 1 ulp)
-    — exactly replayable in SQL; absent labels sit at sigmoid(-30) ~ 0 and
-    surface only via the topPrediction rule (argmax, first label wins
-    ties, ref GLiNER2.swift:330-332)."""
+    — exactly replayable in SQL; absent labels keep the backend's NEG_INF
+    logit (score 0) and surface only via the topPrediction rule (argmax,
+    first label wins ties, ref GLiNER2.swift:330-332)."""
     from glinerswift_spark.operators.classify import classify_documents
     from glinerswift_spark.schema import ClassificationSpec
 
@@ -363,7 +363,7 @@ def _q_classify_gazetteer(spark, sf_dir):
         task="domain", labels=list(FLAGSHIP_LABELS), multi_label=True,
         cls_threshold=0.5,
     )
-    out = classify_documents(_docs(spark, sf_dir), spec, flagship_gazetteer())
+    out = classify_documents(_docs(spark, sf_dir), [spec], flagship_gazetteer())
     return out.select(
         "doc_id", "task", "label", F.round("score", 6).alias("score"), "is_top"
     )
@@ -381,7 +381,7 @@ def _q_classify_softmax(spark, sf_dir):
         task="domain1", labels=list(FLAGSHIP_LABELS), multi_label=False,
         cls_threshold=0.5,
     )
-    out = classify_documents(_docs(spark, sf_dir), spec, flagship_gazetteer())
+    out = classify_documents(_docs(spark, sf_dir), [spec], flagship_gazetteer())
     return out.select(
         "doc_id", "task", "label", F.round("score", 4).alias("score"), "is_top"
     )

@@ -44,86 +44,22 @@ def stable_softmax(x: np.ndarray) -> np.ndarray:
 
 def classify_documents(
     df: DataFrame,
-    spec: ClassificationSpec,
-    backend_spec,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """-> (id, task, label, score, is_top): per-label classification rows.
-
-    Backend contract: document-level label scores = mean of the
-    document's word/label logits (prompt '[C] label' analogue, ref
-    GLiNERModel.swift:218). Scores >= cls_threshold only; is_top marks the
-    max-score label (kept regardless of threshold, like topPrediction).
-    """
-    labels = list(spec.labels)
-    (id_field,) = [f for f in df.schema.fields if f.name == id_col]
-    out_schema = StructType(
-        [
-            id_field,
-            StructField("task", StringType()),
-            StructField("label", StringType()),
-            StructField("score", DoubleType()),
-            StructField("is_top", BooleanType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from glinerswift_spark.functions.text import word_spans
-
-        backend = get_backend(backend_spec)
-        # fast path: a dedicated doc-level head skips the full
-        # [words x widths x labels] span tensor. EVERY shipped backend
-        # provides one (gazetteer: running max; prompt backend: the
-        # reference's classifier-head dataflow; hash/neural stubs:
-        # width-1 slice max); the dense fallback below exists only for
-        # third-party backends that ship score_document alone.
-        fast = getattr(backend, "classify_logits", None)
-        for pdf in batches:
-            rows = {c: [] for c in out_schema.fieldNames()}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                spans = word_spans(text or "")
-                if not spans:
-                    continue
-                if fast is not None:
-                    doc_logits = np.asarray(fast(text, spans, labels), dtype=float)
-                else:
-                    logits = backend.score_document(text, spans, labels)
-                    # document-level label logit: max over candidate spans
-                    finite = np.where(np.isfinite(logits), logits, -np.inf)
-                    doc_logits = finite.max(axis=(0, 1))
-                doc_logits = np.where(np.isfinite(doc_logits), doc_logits, -30.0)
-                probs = (
-                    sigmoid(doc_logits)
-                    if spec.multi_label
-                    else stable_softmax(doc_logits)
-                )
-                top_idx = int(np.argmax(probs))
-                for i, lb in enumerate(labels):
-                    keep = probs[i] >= spec.cls_threshold or i == top_idx
-                    if not keep:
-                        continue
-                    rows[id_col].append(doc_id)
-                    rows["task"].append(spec.task)
-                    rows["label"].append(lb)
-                    rows["score"].append(float(probs[i]))
-                    rows["is_top"].append(i == top_idx)
-            yield pd.DataFrame(rows, columns=out_schema.fieldNames())
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
-def classify_documents_multi(
-    df: DataFrame,
     specs: list[ClassificationSpec],
     backend_spec,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """All classification tasks in ONE corpus pass: the per-task loop
-    runs inside the UDF over each document, so a schema with T tasks
-    costs one scan instead of T (same per-task semantics as
-    classify_documents, same fast classifier-head path)."""
+    """-> (id, task, label, score, is_top): per-label classification rows
+    for every task in ``specs``, in ONE corpus pass — the per-task loop
+    runs inside the UDF over each document, so T tasks cost one scan.
+
+    Document-level label logits come from the backend's
+    ``classify_logits`` (the gazetteer's max term logit, the stub
+    backends' width-1 span max, the prompt backend's classifier head,
+    ref GLiNERModel.swift:218). Scores >= cls_threshold only; is_top
+    marks the max-score label (kept regardless of threshold, like
+    topPrediction).
+    """
     specs = list(specs)
     (id_field,) = [f for f in df.schema.fields if f.name == id_col]
     out_schema = StructType(
@@ -140,7 +76,6 @@ def classify_documents_multi(
         from glinerswift_spark.functions.text import word_spans
 
         backend = get_backend(backend_spec)
-        fast = getattr(backend, "classify_logits", None)
         for pdf in batches:
             rows = {c: [] for c in out_schema.fieldNames()}
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
@@ -149,14 +84,9 @@ def classify_documents_multi(
                     continue
                 for spec in specs:
                     labels = list(spec.labels)
-                    if fast is not None:
-                        doc_logits = np.asarray(
-                            fast(text, spans, labels), dtype=float
-                        )
-                    else:
-                        logits = backend.score_document(text, spans, labels)
-                        finite = np.where(np.isfinite(logits), logits, -np.inf)
-                        doc_logits = finite.max(axis=(0, 1))
+                    doc_logits = np.asarray(
+                        backend.classify_logits(text, spans, labels), dtype=float
+                    )
                     doc_logits = np.where(
                         np.isfinite(doc_logits), doc_logits, -30.0
                     )

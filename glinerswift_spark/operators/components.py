@@ -38,16 +38,13 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    on_exhaustion: str = "raise",
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
     If the labelling is still changing after ``max_iterations`` rounds
     (a component's diameter exceeds the budget — long duplicate chains
-    can do this at web scale), the labels are WRONG, not approximate:
-    ``on_exhaustion='raise'`` (default) fails loudly; ``'warn'`` logs and
-    returns the partial labels for callers that tolerate over-split
-    components."""
+    can do this at web scale), the labels are WRONG, not approximate, so
+    this raises RuntimeError instead of returning them."""
     # checkpoint FIRST: the (possibly expensive) edge computation upstream
     # materializes exactly once — symmetrizing via union would otherwise
     # evaluate the whole upstream plan twice (once per direction)
@@ -68,7 +65,6 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    converged = False
     for rnd in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
@@ -103,18 +99,10 @@ def connected_components(
         changed = updated.where(F.col("__changed")).limit(1).count()
         labels = updated.drop("__changed")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components did not converge in {max_iterations} "
-            "rounds: a component's diameter exceeds the iteration budget "
-            "and the returned labels would over-split it. Raise "
-            "max_iterations (rounds needed = graph diameter)."
-        )
-        if on_exhaustion == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "rounds: a component's diameter exceeds the iteration budget "
+        "and the returned labels would over-split it. Raise "
+        "max_iterations (rounds needed = graph diameter)."
+    )

@@ -355,6 +355,19 @@ def metapath2_counts(
     )
 
 
+def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v) with u < v: the undirected simple graph induced by
+    ``edges`` (direction and parallel edges collapse, self-loops drop)."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
 LPA_COUNT_PAD = 999_999_999_999
 
 
@@ -390,14 +403,7 @@ def label_propagation(
     localCheckpoint cuts lineage so round r replays a materialized
     relation, not r stacked plans.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src, dst)
     adj = (
         und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .union(und.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -452,15 +458,7 @@ def kcore_nodes(
     shrinks as the graph peels, and nothing is ever all-pairs."""
     if rounds is not None and rounds < 1:
         raise ValueError("kcore_nodes needs rounds >= 1 or rounds=None")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected_edges(edges, src, dst).localCheckpoint()
     alive = und.select(F.col("u").alias("node")).union(
         und.select(F.col("v").alias("node"))
     ).distinct()
@@ -516,14 +514,7 @@ def triangle_counts(
     order, deterministic, and replayable verbatim in ANSI SQL (the
     DuckDB oracle runs the same three CTEs).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src, dst)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))

@@ -6,7 +6,7 @@ every span-scoring task — the entity task and every structure field —
 shares ONE extraction pass over the union of their labels; the split
 back into tasks is a broadcast label-config join downstream.
 ALL classification tasks run fused in one document-level classifier-head
-pass (operators/classify.classify_documents_multi), which computes no
+pass (operators/classify.classify_documents), which computes no
 span representations at all — a single second, much cheaper pass
 regardless of how many classification tasks the schema declares.
 
@@ -40,7 +40,7 @@ def run_schema(
     span-scoring tasks fed by a single extract_entities pass.
     """
     from glinerswift_spark.operators.classify import (
-        classify_documents_multi,
+        classify_documents,
         predict_structure_counts,
         structure_from_entities,
         structure_label_groups,
@@ -107,7 +107,7 @@ def run_schema(
     # all classification tasks fused into ONE head-only pass
     classifications = None
     if schema.classification_specs:
-        classifications = classify_documents_multi(
+        classifications = classify_documents(
             df, schema.classification_specs, backend_spec, text_col, id_col
         )
 

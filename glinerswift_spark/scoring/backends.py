@@ -20,6 +20,18 @@ use — GLiNER2SchemaProjectorTests feed fake sequential hidden states):
                        benchmarks. Mean pooling mirrors ref
                        Inference/SpanBuilder.swift:84-108; cosine mirrors
                        ref Inference/SimilarityScorer.swift:77-100.
+  * NeuralStubSpec   — the GLiNER2-shaped span dataflow with seeded
+                       weights: hashed word embeddings -> BiLSTM ->
+                       span-rep FFN -> span x label dot product. The
+                       cost-realistic backend (per-doc LSTM + FFN FLOPs).
+  * PromptEncodingSpec— the full schema-encoding dataflow: prompt+text
+                       subword encoding behind an encoder seam, prompt
+                       projection, span, classifier and count heads.
+
+Every backend provides ``score_document`` (dense [words x widths x
+labels] logits), ``classify_logits`` (document-level label logits) and
+``count_logits``; the two neural backends also batch documents through
+``score_documents``.
 
 Specs are tiny picklable dataclasses (broadcast with the query); the heavy
 state is built lazily ONCE PER PYTHON WORKER via ``get_backend`` — the
@@ -164,28 +176,14 @@ class GazetteerBackend:
         return cached
 
     def classify_logits(self, text: str, spans: list, labels: list) -> np.ndarray:
-        """Document-level label logits WITHOUT materializing the
-        [words x widths x labels] span tensor: the same span enumeration
-        as score_document, but only a running max per label. Value-exact
-        with max-over-the-dense-tensor (labels never hit keep the dense
-        path's NEG_INF fill)."""
-        from glinerswift_spark.config import DEFAULT_CONFIG
-
-        n = len(spans)
-        max_w = DEFAULT_CONFIG.max_span_width
-        label_idx = {lb: i for i, lb in enumerate(labels)}
+        """Document-level label logits: the max logit per label over the
+        sparse hits, so no [words x widths x labels] tensor is built.
+        Value-exact with max-over-the-dense-tensor (labels never hit keep
+        the dense path's NEG_INF fill)."""
         out = np.full(len(labels), NEG_INF)
-        wmax = min(max_w, self.max_phrase_words)
-        by_surface = self.by_surface
-        for s in range(n):
-            cs = spans[s][0]
-            for w in range(min(wmax, n - s)):
-                hit = by_surface.get(text[cs : spans[s + w][1]].lower())
-                if hit:
-                    for lb, lg in hit.items():
-                        li = label_idx.get(lb)
-                        if li is not None and lg > out[li]:
-                            out[li] = lg
+        for _, _, li, lg in self.score_document_sparse(text, spans, labels):
+            if lg > out[li]:
+                out[li] = lg
         return out
 
     def count_logits(self, text: str, structure_name: str) -> np.ndarray:

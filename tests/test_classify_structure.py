@@ -37,7 +37,7 @@ def test_classification_single_label_top1(spark):
     )
     spec = ClassificationSpec("sentiment", ["positive", "negative", "neutral"],
                               multi_label=False, cls_threshold=0.2)
-    out = classify_documents(df, spec, _sentiment_spec())
+    out = classify_documents(df, [spec], _sentiment_spec())
     top = {r.doc_id: r.label for r in out.where(F.col("is_top")).collect()}
     assert top[1] == "positive" and top[2] == "negative"
     # doc 3 has no markers: softmax uniform -> argmax = first label index
@@ -50,7 +50,7 @@ def test_classification_multilabel_threshold(spark):
     )
     spec = ClassificationSpec("sentiment", ["positive", "negative", "neutral"],
                               multi_label=True, cls_threshold=0.5)
-    rows = classify_documents(df, spec, _sentiment_spec()).collect()
+    rows = classify_documents(df, [spec], _sentiment_spec()).collect()
     kept = {r.label for r in rows}
     assert {"positive", "negative"} <= kept
     scores = {r.label: r.score for r in rows}
@@ -95,7 +95,7 @@ def test_classify_documents_with_stub_backend(spark):
     )
     spec = ClassificationSpec("topic", ["operator", "object"],
                               multi_label=False, cls_threshold=0.0)
-    rows = classify_documents(df, spec, HashEmbeddingSpec()).collect()
+    rows = classify_documents(df, [spec], HashEmbeddingSpec()).collect()
     assert {r.doc_id for r in rows} == {1, 2}
     tops = [r for r in rows if r.is_top]
     assert len(tops) == 2  # exactly one top label per doc
@@ -190,13 +190,6 @@ def test_structure_instances_cap_and_order(spark):
 
 
 def test_classify_multi_matches_per_task(spark):
-    from glinerswift_spark.operators.classify import (
-        classify_documents,
-        classify_documents_multi,
-    )
-    from glinerswift_spark.schema import ClassificationSpec
-    from glinerswift_spark.scoring.backends import GazetteerSpec
-
     lex = {("alice", "person"): 0.9, ("sports", "t:sports"): 0.7,
            ("acme", "t:business"): 0.8}
     docs = spark.createDataFrame(
@@ -208,11 +201,11 @@ def test_classify_multi_matches_per_task(spark):
         ClassificationSpec("has_person", ["person"], True, 0.5),
     ]
     spec_df = GazetteerSpec.from_dict(lex)
-    fused = classify_documents_multi(docs, specs, spec_df)
+    fused = classify_documents(docs, specs, spec_df)
     rows_fused = {tuple(r) for r in fused.collect()}
     rows_single = set()
     for s in specs:
-        rows_single |= {tuple(r) for r in classify_documents(docs, s, spec_df).collect()}
+        rows_single |= {tuple(r) for r in classify_documents(docs, [s], spec_df).collect()}
     assert rows_fused == rows_single
     # one corpus pass for BOTH tasks
     plan = fused._jdf.queryExecution().executedPlan().toString()

@@ -115,8 +115,13 @@ def test_sparse_decode_matches_dense(case, threshold):
 
 def test_gazetteer_sparse_path_parity():
     """GazetteerBackend.score_document_sparse + decode_candidates ==
-    dense score_document + decode_spans on real lexicon text."""
-    from glinerswift_spark.scoring.backends import FLAGSHIP_LABELS, flagship_gazetteer
+    dense score_document + decode_spans on real lexicon text, and
+    classify_logits == the dense tensor's max over (words, widths)."""
+    from glinerswift_spark.scoring.backends import (
+        FLAGSHIP_LABELS,
+        NEG_INF,
+        flagship_gazetteer,
+    )
 
     b = flagship_gazetteer().build()
     texts = [
@@ -128,15 +133,18 @@ def test_gazetteer_sparse_path_parity():
     ]
     for text in texts:
         spans = word_spans(text)
+        logits = b.score_document(text, spans, FLAGSHIP_LABELS)
         dense = decode_spans(
-            b.score_document(text, spans, FLAGSHIP_LABELS),
-            FLAGSHIP_LABELS, 0.3, text, spans,
+            logits, FLAGSHIP_LABELS, 0.3, text, spans,
         ) if spans else []
         got = decode_candidates(
             b.score_document_sparse(text, spans, FLAGSHIP_LABELS),
             FLAGSHIP_LABELS, 0.3, text, spans,
         )
         assert got == dense
+        # doc-level logits: the dense tensor's max over (words, widths)
+        doc = logits.max(axis=(0, 1), initial=NEG_INF)
+        assert np.array_equal(b.classify_logits(text, spans, FLAGSHIP_LABELS), doc)
 
 
 entity_strategy = st.builds(

@@ -130,3 +130,12 @@ def test_relation_rule_has_one_engine_emitter():
             "glinerswift_spark/plans/kg_pipeline.py:extract_triples_fused",
         ],
     }
+
+
+def test_classification_has_one_operator():
+    """classify_logits is called only by operators/classify.classify_documents,
+    so document classification has one operator and no dense fallback
+    that re-derives label logits from the span tensor."""
+    assert _call_sites(("classify_logits",)) == {
+        "classify_logits": ["glinerswift_spark/operators/classify.py:classify_documents"]
+    }

@@ -261,13 +261,6 @@ def test_connected_components_exhaustion_raises(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iterations=2)
-    # warn mode returns partial labels instead
-    import warnings
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = connected_components(edges, max_iterations=2, on_exhaustion="warn")
-        assert out.count() == 201
-        assert any("did not converge" in str(x.message) for x in w)
 
 
 def test_salted_join_equals_plain_join_on_hot_key(spark):
