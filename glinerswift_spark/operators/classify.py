@@ -87,9 +87,6 @@ def classify_documents(
                     doc_logits = np.asarray(
                         backend.classify_logits(text, spans, labels), dtype=float
                     )
-                    doc_logits = np.where(
-                        np.isfinite(doc_logits), doc_logits, -30.0
-                    )
                     probs = (
                         sigmoid(doc_logits)
                         if spec.multi_label

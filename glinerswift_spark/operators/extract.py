@@ -101,26 +101,17 @@ def extract_entities(
             )
             yield pd.DataFrame(rows, columns=out_cols)
 
-    from glinerswift_spark.sources.pages import (
-        STRAGGLER_WAVES,
-        widen_small_scan,
-    )
+    from glinerswift_spark.sources.pages import widen_small_scan
 
     # explicit narrow projection => column pruning reaches the scan;
-    # widen_small_scan parallelizes the inference pass when the scan is
-    # narrower than core count (single-row-group test parquet) — a no-op
-    # at real scale, and never a shuffle of the (much larger) output.
-    # A hidden_states_provider means a real encoder: ~0.1-0.2 s/doc, so
-    # several task waves smooth doc-length stragglers; the hash and
-    # gazetteer backends are scan-speed and want exactly one wave
-    # (measured both ways — see widen_small_scan).
-    waves = (
-        STRAGGLER_WAVES
-        if getattr(backend_spec, "hidden_states_provider", None) is not None
-        else 1
-    )
+    # widen_small_scan gives the inference pass one task per core when
+    # the scan is narrower than that (single-row-group test parquet) —
+    # a no-op at real scale, and never a shuffle of the (much larger)
+    # output. One task per core for every backend: each Python task
+    # costs ~40-60 ms fixed, more than extra tasks win back from
+    # doc-length stragglers even on the encoder path.
     return (
-        widen_small_scan(df.select(*id_cols, text_col), id_cols[0], waves)
+        widen_small_scan(df.select(*id_cols, text_col), id_cols[0])
         .mapInPandas(run, schema=out_schema)
     )
 

@@ -16,6 +16,7 @@ Output: nodes(canonical_id, label, surface_forms, n_mentions),
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from glinerswift_spark.config import LinkingConfig
@@ -33,24 +34,26 @@ def char_shingles(col, n: int):
     return F.array_distinct(F.transform(idx, lambda i: F.substr(lower, i, F.lit(n))))
 
 
-def mention_candidate_pairs(
+def mention_signatures(
     mentions: DataFrame, cfg: LinkingConfig | None = None
 ) -> DataFrame:
-    """(mention_a, mention_b) candidates: same label, shared LSH band sig."""
+    """(mention_id, label, band, sig): one row per LSH band of the
+    lowercased surface's character shingles."""
     cfg = cfg or LinkingConfig()
     sh = mentions.select(
         "mention_id",
         "label",
         shingle_hashes(char_shingles(F.col("text"), cfg.shingle_size)).alias("__h"),
     )
-    sigs = sh.select(
+    return sh.select(
         "mention_id", "label", band_signatures(F.col("__h"), cfg.num_bands).alias("bs")
     ).select("mention_id", "label", "bs.band", "bs.sig")
-    # both self-join halves reference sigs: persist so the per-mention
-    # shingle md5 work runs once (see dedup.minhash_candidate_pairs)
-    from pyspark import StorageLevel
 
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+
+def mention_candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """(mention_a, mention_b) candidates: same label, shared LSH band sig.
+    Both self-join halves read ``sigs``: persist it so the per-mention
+    shingle md5 work runs once (see dedup.minhash_candidate_pairs)."""
     a = sigs.select("label", "band", "sig", F.col("mention_id").alias("mention_a"))
     b = sigs.select("label", "band", "sig", F.col("mention_id").alias("mention_b"))
     return (
@@ -107,12 +110,17 @@ def link_mentions(mentions: DataFrame, cfg: LinkingConfig | None = None):
         "label",
         "embedding",
     )
-    pairs = mention_candidate_pairs(sdf, cfg)
+    sigs = mention_signatures(sdf, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = mention_candidate_pairs(sigs)
     verified = verify_pairs_by_cosine(pairs, sdf, cfg)
     cc = connected_components(
         verified, src="mention_a", dst="mention_b",
         max_iterations=cfg.max_cc_iterations,
     )
+    # connected_components checkpointed the verified edges first thing,
+    # so nothing reads sigs again; the returned ``verified`` plan
+    # recomputes from its lineage
+    sigs.unpersist()
     surface_canon = surfaces.join(
         cc.withColumnRenamed("node", "surface_id"), "surface_id", "left"
     ).select(

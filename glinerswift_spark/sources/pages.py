@@ -20,74 +20,34 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-STRAGGLER_WAVES = 4  # tasks per core for chunky per-row work (see below)
+def widen_small_scan(df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition on ``key`` to one task per core ONLY when the
+    upstream plan yields fewer partitions than cores.
 
-# Minimum rows per widened task before extra waves pay for themselves:
-# every task carries fixed Python-worker + Arrow setup cost, so widening
-# 50 rows to waves*cores tasks leaves most tasks empty and every one
-# paying overhead (the round-5 regression: 50 docs -> 128 partitions
-# halved the driver's encoder-file throughput, 56.1 -> 28.1 docs/s).
-WIDEN_ROWS_PER_TASK = 2
+    For CPU-dense per-row work (shingling, per-word hashing, inference) a
+    small table whose parquet is a single row group pins one core no
+    matter how many exist — the scan cannot be split below row-group
+    granularity. At 100 TB the scan already produces far more splits
+    than cores, the guard is false, and NO shuffle is added. Hash
+    partitioning (not round-robin) so Spark skips the
+    sort-before-repartition pass round-robin needs for retry
+    determinism. Apply this inside compute-heavy operators, not at the
+    loader: cheap queries and broadcast-friendly plans (e.g. ANN top-k)
+    are faster WITHOUT the extra exchange.
 
-
-def widen_small_scan(df: DataFrame, key: str, waves: int = 1) -> DataFrame:
-    """Hash-repartition on ``key`` ONLY when the upstream plan yields
-    fewer partitions than cores.
-
-    For CPU-dense per-row work (shingling, per-word hashing) a small
-    table whose parquet is a single row group pins one core no matter how
-    many exist — the scan cannot be split below row-group granularity.
-    At 100 TB the scan already produces far more splits than cores, the
-    guard is false, and NO shuffle is added. Hash partitioning (not
-    round-robin) so Spark skips the sort-before-repartition pass
-    round-robin needs for retry determinism. Apply this inside
-    compute-heavy operators, not at the loader: cheap queries and
-    broadcast-friendly plans (e.g. ANN top-k) are faster WITHOUT the
-    extra exchange.
-
-    ``waves`` — tasks per core, and the right value depends on per-ROW
-    cost, measured both ways on sf0.1 at local[32]:
-
-    * cheap rows (hash/gazetteer extraction, shingling: micro-seconds
-      per row) → waves=1. Per-task fixed overhead (python worker spin,
-      Arrow batch setup) dominates extra tasks: waves=4 measured ~2x
-      SLOWER on the fused flagship (0.84-1.43 s -> 1.81-2.69 s) and on
-      minhash_pairs.
-    * chunky rows (a d=512 file-loaded encoder at ~0.1-0.2 s/doc) →
-      STRAGGLER_WAVES. With one task per core the job's wall time is
-      the slowest hash bucket; doc-length plus bucket-count variance
-      cost 30-50% at the tail (the d=512 bench scaled N->4N at 0.53
-      with one wave). Several waves let the scheduler smooth
-      stragglers — why real clusters run 2-4x tasks per slot.
-
-    Callers with a configurable backend pick per spec: an attached
-    hidden_states_provider means chunky rows (operators/extract.py).
-
-    For ``waves > 1`` the widened partition count is additionally CAPPED
-    by input size: ``min(waves * cores, max(cores, ceil(n_rows /
-    WIDEN_ROWS_PER_TASK)))``. Straggler smoothing only pays when there
-    are enough rows to fill the extra task waves; below that, every
-    extra task is pure fixed overhead (the round-5 encoder-file
-    regression: 50 docs widened to 128 partitions). The row count costs
-    one extra scan job, capped at ``waves * cores * WIDEN_ROWS_PER_TASK``
-    rows and paid ONLY on the chunky-row path where the guard already
-    established the input is a sub-core-count scan and per-row inference
-    cost dwarfs it.
+    Exactly one task per core, never more: every Python task carries a
+    fixed cost (worker hand-off, Arrow batch setup) of ~40-60 ms that
+    does not spread across cores. A no-op ``mapInPandas`` over 400 docs
+    took 0.28-0.31 s at 4 partitions, 0.93-1.06 s at 16 and 2.74-3.08 s
+    at 64, against 0.08-0.21 s for a JVM-only ``count`` of the same
+    repartition (local[4], 4 vCPUs). Extra tasks to smooth doc-length
+    stragglers cost more than the stragglers on the encoder path too:
+    4 tasks per core ran ``encoder_extract`` 24-30% slower than one.
     """
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:
         return df
-    n = waves * cores
-    if waves > 1:
-        # the formula never needs more than n * WIDEN_ROWS_PER_TASK rows,
-        # so the probe stops there instead of counting the whole input.
-        # collect() of the limit runs as a take (no exchange): 0.09 s
-        # against 0.16 s for limit().count() and 0.13 s for a full
-        # count() (400-row single-file scan, local[4], 4 vCPUs)
-        n_rows = len(df.limit(n * WIDEN_ROWS_PER_TASK).select(F.lit(1)).collect())
-        n = min(n, max(cores, -(-n_rows // WIDEN_ROWS_PER_TASK)))
-    return df.repartition(n, F.col(key))
+    return df.repartition(cores, F.col(key))
 
 
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

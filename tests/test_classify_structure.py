@@ -87,6 +87,36 @@ def test_stub_backend_classifier_fast_path_is_width1_slice_max():
     assert (backend.classify_logits("", [], labels) < -1e29).all()
 
 
+def test_classify_logits_finite_for_shipped_backends(sf_dir):
+    """classify_documents feeds classify_logits straight into
+    sigmoid/softmax with no clamp: every shipped backend returns finite
+    logits (the gazetteer's absent labels sit at NEG_INF = -1e30)."""
+    import pandas as pd
+
+    from glinerswift_spark.functions.text import word_spans
+    from glinerswift_spark.scoring.backends import (
+        FLAGSHIP_LABELS,
+        HashEmbeddingSpec,
+        NeuralStubSpec,
+        PromptEncodingSpec,
+        flagship_gazetteer,
+    )
+
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    texts = docs.sort_values("doc_id")["text"].head(8).tolist()
+    for spec in (
+        flagship_gazetteer(), HashEmbeddingSpec(), NeuralStubSpec(),
+        PromptEncodingSpec(),
+    ):
+        backend = spec.build()
+        for text in texts:
+            logits = np.asarray(backend.classify_logits(
+                text, word_spans(text), list(FLAGSHIP_LABELS)
+            ))
+            assert logits.shape == (len(FLAGSHIP_LABELS),), spec
+            assert np.isfinite(logits).all(), spec
+
+
 def test_classify_documents_with_stub_backend(spark):
     from glinerswift_spark.scoring.backends import HashEmbeddingSpec
 

@@ -48,6 +48,19 @@ def test_build_kg_end_to_end(spark, sf_dir):
     assert len(top) > 0 and top[0].n >= top[-1].n
 
 
+def test_build_kg_leaves_no_cache_entry(spark, sf_dir):
+    """linking persists its LSH signatures for the candidate self-join
+    and releases them once connected components has checkpointed the
+    verified edges; the returned plans still recompute from lineage."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    docs = read_documents(spark, sf_dir).limit(60)
+    emb = read_embeddings(spark, sf_dir)
+    kg = build_kg(docs, emb, FLAGSHIP_LABELS, flagship_gazetteer(), threshold=0.5)
+    assert cache.numCachedEntries() == before
+    assert kg["nodes"].count() > 0
+
+
 def test_incremental_update_equals_full_rebuild(spark, sf_dir):
     """build_kg(prior=...) over (prior batch, new batch) must reproduce
     the full build's nodes AND edges exactly — extraction never re-runs

@@ -207,61 +207,41 @@ def test_adversarial_inputs_long_doc_and_extreme_threshold(spark):
                             threshold=0.99).count() == 0
 
 
-def test_widen_waves_selected_per_backend(spark, tmp_path):
-    # cheap backends (gazetteer/hash) must widen to EXACTLY one task
-    # wave per core; an attached hidden_states_provider means chunky
-    # per-row work and gets STRAGGLER_WAVES — but ONLY when the input is
-    # large enough to fill the extra waves (round-6 fix for the r5
-    # encoder-file regression: 50 docs widened to waves*cores mostly-
-    # empty tasks). Measured basis in sources/pages.widen_small_scan —
-    # this pins BOTH regimes so neither side can regress.
+def test_widen_one_task_per_core_every_backend(spark, tmp_path):
+    # every backend widens a narrow scan to EXACTLY one task per core:
+    # each Python task costs ~40-60 ms fixed, so neither a small input
+    # (mostly empty tasks) nor a large one (straggler waves) may get
+    # more tasks — basis in sources/pages.widen_small_scan. Building the
+    # plan runs no Spark job (no eager row probe).
     from glinerswift_spark.scoring.backends import PromptEncodingSpec
     from glinerswift_spark.scoring.encoder import (
         FileEncoderProvider,
         NumpyEncoder,
     )
-    from glinerswift_spark.sources.pages import (
-        STRAGGLER_WAVES,
-        WIDEN_ROWS_PER_TASK,
-    )
 
-    cores = spark.sparkContext.defaultParallelism
-    df = spark.createDataFrame(
-        [(i, "john smith works at apple") for i in range(50)],
-        "doc_id long, text string",
-    ).coalesce(1)  # narrower than cores => widen_small_scan fires
-
-    cheap = extract_entities(
-        df, ["x"], flagship_gazetteer(), threshold=0.5
-    )
-    assert cheap.rdd.getNumPartitions() == cores
-
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
     enc = NumpyEncoder.seeded(dim=16, n_layers=1, vocab=64)
     enc.save(str(tmp_path))
-    spec = PromptEncodingSpec(
+    chunky = PromptEncodingSpec(
         dim=16,
         hidden_states_provider=FileEncoderProvider(weights_dir=str(tmp_path)),
     )
-    # small input: the size cap wins — ceil(50/ROWS_PER_TASK) = 25 < cores,
-    # so the encoder job gets exactly one wave, not waves*cores empties
-    chunky_small = extract_entities(df, ["person"], spec, threshold=0.3)
-    expected_small = min(
-        STRAGGLER_WAVES * cores, max(cores, -(-50 // WIDEN_ROWS_PER_TASK))
-    )
-    assert chunky_small.rdd.getNumPartitions() == expected_small
-    # large input: enough rows to fill every wave — full widening stands
-    # (the d=512 wide-encoder smoothing must survive the cap)
-    n_big = STRAGGLER_WAVES * cores * WIDEN_ROWS_PER_TASK
-    big = spark.createDataFrame(
-        [(i, "john smith works at apple") for i in range(n_big)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    chunky_big = extract_entities(big, ["person"], spec, threshold=0.3)
-    assert chunky_big.rdd.getNumPartitions() == STRAGGLER_WAVES * cores
-    # above the row-count probe's cap (limit(n_big)): same full widening
-    above = spark.createDataFrame(
-        [(i, "john smith works at apple") for i in range(3 * n_big)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    chunky_above = extract_entities(above, ["person"], spec, threshold=0.3)
-    assert chunky_above.rdd.getNumPartitions() == STRAGGLER_WAVES * cores
+    plans = []
+    sc.setJobGroup("build", "extract_entities plan building")
+    try:
+        for n_rows in (50, 2000):
+            df = spark.createDataFrame(
+                [(i, "john smith works at apple") for i in range(n_rows)],
+                "doc_id long, text string",
+            ).coalesce(1)  # narrower than cores => widen_small_scan fires
+            plans.append(extract_entities(
+                df, ["x"], flagship_gazetteer(), threshold=0.5
+            ))
+            plans.append(
+                extract_entities(df, ["person"], chunky, threshold=0.3)
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("build")) == []
+    assert [p.rdd.getNumPartitions() for p in plans] == [cores] * 4
