@@ -42,7 +42,7 @@ def widen_small_scan(df: DataFrame, key: str) -> DataFrame:
     at 64, against 0.08-0.21 s for a JVM-only ``count`` of the same
     repartition (local[4], 4 vCPUs). Extra tasks to smooth doc-length
     stragglers cost more than the stragglers on the encoder path too:
-    4 tasks per core ran ``encoder_extract`` 24-30% slower than one.
+    one task per core cut ``encoder_extract`` job_s 24-25% against 4.
     """
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:
